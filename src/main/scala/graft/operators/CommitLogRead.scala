@@ -89,12 +89,13 @@ object CommitLogRead {
   def commitLogHistoryQ(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     val table = buildScriptTable(documents)
+    val history = CommitLog.commits(table, 5L)
     (0L to 5L).map { v =>
-      val c = CommitLog.commits(table, v).last
+      val c = history(v.toInt)
+      val prior = history.take(v.toInt).flatMap(_.adds).toSet
       val action =
         if (c.removes.isEmpty) "append"
-        else if (c.adds.forall(f => CommitLog.commits(table, v - 1)
-          .exists(_.adds.contains(f)))) "restore"
+        else if (c.adds.forall(prior)) "restore"
         else "replace"
       val df = CommitLog.read(spark, table, Some(v))
       val n = if (df.columns.isEmpty) spark.range(0).toDF("doc_id") else df
@@ -220,7 +221,7 @@ object CommitLogRead {
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     val untouched = CommitLog.append(spark, table,
       base.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 =!= 0)) // v1
-    val v1Files = CommitLog.commits(table, untouched).last.adds.toSet
+    val v1Files = CommitLog.commitAt(table, untouched).adds.toSet
     // v2 — if the corpus holds no %5==0 rows (a degenerate tiny corpus),
     // deleteWhere no-ops WITHOUT committing (the Delta convention) and
     // the "v2" emission reads the unchanged head: the oracle's v2 set
@@ -268,7 +269,7 @@ object CommitLogRead {
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     val untouched = CommitLog.append(spark, table,
       base.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 =!= 0)) // v1
-    val v1Files = CommitLog.commits(table, untouched).last.adds.toSet
+    val v1Files = CommitLog.commitAt(table, untouched).adds.toSet
     // v2 — a corpus with no %5==0 rows no-ops WITHOUT committing (the
     // delete convention): the "v2" emission then reads the unchanged
     // head and the oracle's v2 set equals its v1 set (update of zero
@@ -507,7 +508,7 @@ object CommitLogRead {
     CommitLog.append(spark, table, base.filter(col("doc_id") % 3 === 0)) // v0
     val untouched = CommitLog.append(spark, table,
       base.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 =!= 0)) // v1
-    val v1Files = CommitLog.commits(table, untouched).last.adds.toSet
+    val v1Files = CommitLog.commitAt(table, untouched).adds.toSet
     val src = base
       .filter((col("doc_id") % 3 === 0 && col("doc_id") % 5 === 0) ||
         (col("doc_id") % 3 === 2 && col("doc_id") % 7 === 0))

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -27,12 +28,14 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, DoubleType, 
   *   <table>/<uuid>-part-NNNNN.parquet   immutable data files
   *   <table>/_graft_log/<v%020d>.json    one commit per version, v = 0..
   * }}}
-  * A commit file is JSON LINES, one action per line:
-  * `{"add":"<file>"}` or `{"remove":"<file>"}`. Table state at version v
-  * = fold of actions 0..v (adds minus removes); data files are never
-  * mutated, so a reader that resolved its file list at version v is
-  * isolated from every later commit (and from vacuum, as long as v is
-  * inside the retention window).
+  * A commit file is JSON LINES, one action per line; the [[Action]] ADT
+  * with its [[encode]]/[[decode]] pair is the single definition of the
+  * line format, for commit files and checkpoints alike. Table state at
+  * version v is a [[Snapshot]]: the fold of commits 0..v by
+  * [[Snapshot.apply]]; data files are never mutated, so a reader that
+  * resolved its file list at version v is isolated from every later
+  * commit (and from vacuum, as long as v is inside the retention
+  * window).
   *
   * CONCURRENCY: the exclusivity primitive is `CREATE_NEW` on the commit
   * file — exactly one writer can create `<v>.json`, so version numbers
@@ -51,32 +54,174 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DateType, DoubleType, 
   * reads hand Spark a closed file list so partition pruning and column
   * pruning work unchanged. Log growth is handled by [[checkpoint]]
   * (the Delta `_checkpoint` design): a checkpoint materializes the
-  * folded live-file state at a version, and [[liveFiles]] replays only
-  * the commit suffix past the newest checkpoint — O(suffix) per read
-  * instead of O(commits).
+  * snapshot at a version, and [[snapshot]] replays only the commit
+  * suffix past the newest checkpoint — O(suffix) per read instead of
+  * O(commits).
   */
 object CommitLog {
 
-  /** One commit's actions, already parsed. `txns` carries the
-    * idempotent-writer watermarks recorded by [[appendIdempotent]]
-    * (Delta's txnAppId/txnVersion design, public); `meta` the
-    * base64-encoded schema JSON recorded by [[evolveSchema]] (Delta's
-    * metaData action, public); `addStats` per-added-file column stats
-    * (base64 JSON — Delta's add-action `stats` field, public design;
-    * round 15); `ctsMillis` the commit's own wall timestamp recorded IN
-    * the action lines (round 15 — deterministic under file copy, unlike
-    * Delta's legacy mtime fallback). */
-  case class Commit(version: Long, adds: Vector[String], removes: Vector[String],
-                    txns: Vector[(String, Long)] = Vector.empty,
-                    meta: Option[String] = None,
-                    addStats: Map[String, String] = Map.empty,
-                    ctsMillis: Option[Long] = None,
-                    dvs: Vector[(String, String)] = Vector.empty,
-                    dvRms: Vector[String] = Vector.empty,
-                    constraints: Vector[(String, String)] = Vector.empty,
-                    constraintRms: Vector[String] = Vector.empty,
-                    gencols: Vector[(String, String)] = Vector.empty,
-                    gencolRms: Vector[String] = Vector.empty)
+  /** One commit-log action — the single definition of the on-disk line
+    * format ([[encode]] / [[decode]]), shared by commit files and
+    * checkpoints. The action set is Delta's (public design): `Add` with
+    * the add-action `stats` payload (base64 JSON), `Remove`, `Txn` (the
+    * idempotent-writer watermark, txnAppId/txnVersion), `Meta` (base64
+    * Spark schema JSON, the metaData action), `Cts` (the commit's own
+    * wall timestamp — deterministic under file copy, unlike an mtime),
+    * `Dv`/`DvRm` (deletion-vector attach/clear on a target data file),
+    * `Constraint`/`ConstraintRm` and `Gencol`/`GencolRm` (CHECK
+    * constraints and generated columns, base64 SQL), and `Cpv`, the
+    * header line of a complete checkpoint. Writers emit a commit's lines
+    * in the order cts, meta, txn, remove, constraintrm, constraint,
+    * gencolrm, gencol, dvrm, dv, add; readers fold by kind
+    * ([[Snapshot.apply]]), never by line order. */
+  sealed trait Action
+  case class Add(path: String, stats: Option[String] = None) extends Action
+  case class Remove(path: String) extends Action
+  case class Txn(app: String, version: Long) extends Action
+  case class Meta(schemaB64: String) extends Action
+  case class Cts(millis: Long) extends Action
+  case class Dv(path: String, target: String) extends Action
+  case class DvRm(target: String) extends Action
+  case class Constraint(name: String, exprB64: String) extends Action
+  case class ConstraintRm(name: String) extends Action
+  case class Gencol(name: String, exprB64: String) extends Action
+  case class GencolRm(name: String) extends Action
+  case class Cpv(version: Int) extends Action
+
+  /** The one line encoder. It also rejects what a line cannot carry —
+    * a path or app id with a JSON-breaking character (names are embedded
+    * without escaping; [[stage]]'s uuid-part names never trip it), a
+    * constraint/gencol name outside [A-Za-z0-9_], a non-base64 payload,
+    * a negative number — so commits and checkpoints are checked alike. */
+  def encode(a: Action): String = {
+    def str(s: String) = {
+      require(s.nonEmpty && !s.exists(c => c == '"' || c == '\\' || c < ' '),
+        s"data file name contains a JSON-breaking character: '$s'")
+      s
+    }
+    def only(s: String, extra: String) =
+      s.nonEmpty && s.forall(c => (c < 128 && c.isLetterOrDigit) || extra.indexOf(c) >= 0)
+    def name(n: String) = {
+      require(only(n, "_"), s"constraint/gencol name must be [A-Za-z0-9_]+, got '$n'")
+      n
+    }
+    def b64(p: String) = {
+      require(only(p, "+/="), s"payload must be base64, got '${p.take(40)}'")
+      p
+    }
+    def num(n: Long) = { require(n >= 0, s"action number must be >= 0, got $n"); n }
+    a match {
+      case Add(p, None) => s"""{"add":"${str(p)}"}"""
+      case Add(p, Some(st)) => s"""{"add":{"path":"${str(p)}","statsB64":"${b64(st)}"}}"""
+      case Remove(p) => s"""{"remove":"${str(p)}"}"""
+      case Txn(app, v) => s"""{"txn":{"app":"${str(app)}","version":${num(v)}}}"""
+      case Meta(s) => s"""{"meta":{"schemaB64":"${b64(s)}"}}"""
+      case Cts(ms) => s"""{"cts":${num(ms)}}"""
+      case Dv(p, t) => s"""{"dv":{"path":"${str(p)}","target":"${str(t)}"}}"""
+      case DvRm(t) => s"""{"dvrm":"${str(t)}"}"""
+      case Constraint(n, e) => s"""{"constraint":{"name":"${name(n)}","exprB64":"${b64(e)}"}}"""
+      case ConstraintRm(n) => s"""{"constraintrm":"${name(n)}"}"""
+      case Gencol(n, e) => s"""{"gencol":{"name":"${name(n)}","exprB64":"${b64(e)}"}}"""
+      case GencolRm(n) => s"""{"gencolrm":"${name(n)}"}"""
+      case Cpv(n) => s"""{"cpv":${num(n)}}"""
+    }
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The one line decoder. A line is valid iff it is exactly the
+    * encoding of the action it parses to, so a malformed or
+    * future-extended line FAILS LOUDLY instead of yielding a silently
+    * wrong snapshot. */
+  def decode(line: String): Action =
+    scala.util.Try[Action] {
+      val Seq(e) = Json.readTree(line).properties().asScala.toSeq
+      val v = e.getValue
+      def f(n: String) = v.get(n).asText
+      e.getKey match {
+        case "add" if v.isTextual => Add(v.asText)
+        case "add" => Add(f("path"), Some(f("statsB64")))
+        case "remove" => Remove(v.asText)
+        case "txn" => Txn(f("app"), v.get("version").asLong)
+        case "meta" => Meta(f("schemaB64"))
+        case "cts" => Cts(v.asLong)
+        case "dv" => Dv(f("path"), f("target"))
+        case "dvrm" => DvRm(v.asText)
+        case "constraint" => Constraint(f("name"), f("exprB64"))
+        case "constraintrm" => ConstraintRm(v.asText)
+        case "gencol" => Gencol(f("name"), f("exprB64"))
+        case "gencolrm" => GencolRm(v.asText)
+        case "cpv" => Cpv(v.asInt)
+      }
+    }.filter(encode(_) == line).getOrElse(
+      throw new IllegalStateException(s"unparseable action line: '$line'"))
+
+  /** One commit: its version and its actions in line order. */
+  case class Commit(version: Long, actions: Seq[Action]) {
+    def adds: Seq[String] = actions.collect { case Add(p, _) => p }
+    def removes: Seq[String] = actions.collect { case Remove(p) => p }
+  }
+
+  /** Table state at `version` — every state reader ([[liveFiles]],
+    * [[liveDvs]], [[txnLatest]], [[schemaAt]], [[constraintsAt]],
+    * [[generatedAt]], the reads, [[checkpoint]]) is a view of one of
+    * these. `files`: live data file → its stats payload, in first-added
+    * order; `dvs`: target data file → its CURRENT dv file; `txns`: per-app
+    * watermark; `meta`: the newest schema payload; `constraints`/`gencols`:
+    * name → base64 SQL; `ctsMax`: the MONOTONIZED commit-timestamp running
+    * max (−1 before any cts) — wall clocks on concurrent writers can run
+    * backwards, version numbers cannot. */
+  case class Snapshot(version: Long,
+                      files: VectorMap[String, Option[String]] = VectorMap.empty,
+                      dvs: VectorMap[String, String] = VectorMap.empty,
+                      txns: VectorMap[String, Long] = VectorMap.empty,
+                      meta: Option[String] = None,
+                      constraints: VectorMap[String, String] = VectorMap.empty,
+                      gencols: VectorMap[String, String] = VectorMap.empty,
+                      ctsMax: Long = -1L) {
+
+    /** The state after commit `c`. Folds in PHASE order — removes, adds,
+      * dv attachments and metadata, then dv/constraint/gencol drops —
+      * never line order: an add clears its target's dv, and a restore
+      * writes the re-added file's dv line BEFORE its add line. */
+    def apply(c: Commit): Snapshot =
+      c.actions.sortBy {
+        case _: Remove => 0
+        case _: Add => 1
+        case _: Dv => 2
+        case _: DvRm | _: ConstraintRm | _: GencolRm => 4
+        case _ => 3
+      }.foldLeft(copy(version = c.version)) {
+        case (s, Remove(p)) => s.copy(files = s.files - p, dvs = s.dvs - p)
+        case (s, Add(p, st)) => s.copy(files = s.files.updated(p, st), dvs = s.dvs - p)
+        case (s, Dv(p, t)) => s.copy(dvs = s.dvs.updated(t, p))
+        case (s, DvRm(t)) => s.copy(dvs = s.dvs - t)
+        // txnVersions are monotone per app ([[appendIdempotent]]): max = latest
+        case (s, Txn(app, v)) =>
+          s.copy(txns = s.txns.updated(app, math.max(v, s.txns.getOrElse(app, -1L))))
+        case (s, Meta(b64)) => s.copy(meta = Some(b64))
+        case (s, Cts(ms)) => s.copy(ctsMax = math.max(ms, s.ctsMax))
+        case (s, Constraint(n, e)) => s.copy(constraints = s.constraints.updated(n, e))
+        case (s, ConstraintRm(n)) => s.copy(constraints = s.constraints - n)
+        case (s, Gencol(n, e)) => s.copy(gencols = s.gencols.updated(n, e))
+        case (s, GencolRm(n)) => s.copy(gencols = s.gencols - n)
+        case (s, _: Cpv) => s
+      }
+
+    def liveFiles: Seq[String] = files.keys.toVector
+
+    def schema: Option[StructType] = meta.map(decodeSchema)
+
+    /** This state as a checkpoint body: folding it onto an empty
+      * snapshot gives this snapshot back. */
+    def actions: Seq[Action] =
+      Seq[Action](Cpv(CheckpointFormatVersion)) ++ Option.when(ctsMax >= 0)(Cts(ctsMax)) ++
+        meta.map(Meta) ++ txns.map(Txn.tupled) ++
+        constraints.map(Constraint.tupled) ++ gencols.map(Gencol.tupled) ++
+        dvs.map { case (t, p) => Dv(p, t) } ++ files.map { case (f, st) => Add(f, st) }
+  }
+
+  private val Empty = Snapshot(-1L)
 
   /** A serializable rewrite lost the race: someone committed
     * `actualLatest` ≥ the version this writer needed. */
@@ -85,107 +230,47 @@ object CommitLog {
   private def logDir(table: String): Path = Paths.get(table, "_graft_log")
   private def commitFile(table: String, v: Long): Path =
     logDir(table).resolve(f"$v%020d.json")
+  private def checkpointFile(table: String, v: Long): Path =
+    logDir(table).resolve(f"$v%020d.checkpoint.json")
 
-  private val AddRe = """\{"add":"([^"]+)"\}""".r
-  private val AddStatsRe =
-    """\{"add":\{"path":"([^"]+)","statsB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val RemoveRe = """\{"remove":"([^"]+)"\}""".r
-  private val TxnRe = """\{"txn":\{"app":"([^"]+)","version":(\d+)\}\}""".r
-  private val MetaRe = """\{"meta":\{"schemaB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val CtsRe = """\{"cts":(\d+)\}""".r
-  private val DvRe = """\{"dv":\{"path":"([^"]+)","target":"([^"]+)"\}\}""".r
-  private val DvRmRe = """\{"dvrm":"([^"]+)"\}""".r
-  private val ConstraintRe =
-    """\{"constraint":\{"name":"([A-Za-z0-9_]+)","exprB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val ConstraintRmRe = """\{"constraintrm":"([A-Za-z0-9_]+)"\}""".r
-  private val GencolRe =
-    """\{"gencol":\{"name":"([A-Za-z0-9_]+)","exprB64":"([A-Za-z0-9+/=]+)"\}\}""".r
-  private val GencolRmRe = """\{"gencolrm":"([A-Za-z0-9_]+)"\}""".r
-
-  /** Parsed action lines of one commit or checkpoint body. `dvs` =
-    * deletion-vector attachments (dvfile, target data file) — the
-    * merge-on-read DELETE actions (round 16); `dvRms` explicit DV
-    * clears (restore re-emitting an older version's DV state). */
-  private case class Actions(adds: Vector[String], removes: Vector[String],
-                             txns: Vector[(String, Long)], meta: Option[String],
-                             addStats: Map[String, String],
-                             ctsMillis: Option[Long],
-                             dvs: Vector[(String, String)],
-                             dvRms: Vector[String],
-                             constraints: Vector[(String, String)],
-                             constraintRms: Vector[String],
-                             gencols: Vector[(String, String)],
-                             gencolRms: Vector[String])
-
-  /** Parse one commit's lines, FAILING LOUDLY on anything that matches
-    * no action pattern — a malformed or future-extended line must
-    * not yield a silently wrong snapshot (the commits() contract). Blank
+  /** Decoded action lines of one commit or checkpoint file. Blank
     * trailing lines are tolerated (every writer ends the file with \n). */
-  private def parseActions(lines: Iterable[String], where: Path): Actions = {
-    val adds = Vector.newBuilder[String]
-    val removes = Vector.newBuilder[String]
-    val txns = Vector.newBuilder[(String, Long)]
-    val stats = Map.newBuilder[String, String]
-    val dvs = Vector.newBuilder[(String, String)]
-    val dvRms = Vector.newBuilder[String]
-    val constraints = Vector.newBuilder[(String, String)]
-    val constraintRms = Vector.newBuilder[String]
-    val gencols = Vector.newBuilder[(String, String)]
-    val gencolRms = Vector.newBuilder[String]
-    var meta: Option[String] = None
-    var cts: Option[Long] = None
-    lines.foreach {
-      case AddRe(f) => adds += f
-      case AddStatsRe(f, b64) => adds += f; stats += (f -> b64)
-      case RemoveRe(f) => removes += f
-      case TxnRe(app, v) => txns += (app -> v.toLong)
-      case MetaRe(b64) => meta = Some(b64)
-      case CtsRe(ms) => cts = Some(ms.toLong)
-      case DvRe(p, t) => dvs += (p -> t)
-      case DvRmRe(t) => dvRms += t
-      case ConstraintRe(n, b64) => constraints += (n -> b64)
-      case ConstraintRmRe(n) => constraintRms += n
-      case GencolRe(n, b64) => gencols += (n -> b64)
-      case GencolRmRe(n) => gencolRms += n
-      case l if l.trim.isEmpty => ()
-      case l => throw new IllegalStateException(
-        s"unparseable action line in $where: '$l'")
-    }
-    Actions(adds.result(), removes.result(), txns.result(), meta,
-      stats.result(), cts, dvs.result(), dvRms.result(),
-      constraints.result(), constraintRms.result(),
-      gencols.result(), gencolRms.result())
-  }
+  private def readActions(f: Path): Vector[Action] =
+    Files.readAllLines(f).asScala.iterator.filterNot(_.trim.isEmpty).map { l =>
+      try decode(l)
+      catch {
+        case e: IllegalStateException =>
+          throw new IllegalStateException(s"$f: ${e.getMessage}", e)
+      }
+    }.toVector
 
-  /** Data-file names are embedded in JSON string literals without
-    * escaping; [[stage]] generates uuid-part-NNNNN names so this never
-    * fires in normal operation — it guards a hand-built commit. */
-  private def requireSafeName(f: String): Unit =
-    require(!f.exists(c => c == '"' || c == '\\' || c < ' '),
-      s"data file name contains a JSON-breaking character: '$f'")
-
-  /** Latest committed version, -1 for a table with no commits. */
-  def latestVersion(table: String): Long = {
+  /** ONE listing of the log: the latest committed version (−1 for a
+    * table with no commits) and every checkpoint's version. */
+  private def listLog(table: String): (Long, Seq[Long]) = {
     val d = logDir(table)
-    if (!Files.isDirectory(d)) -1L
+    if (!Files.isDirectory(d)) (-1L, Nil)
     else {
       val s = Files.list(d)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.endsWith(".json") && !n.endsWith(".checkpoint.json"))
-        .map(_.stripSuffix(".json").toLong).foldLeft(-1L)(math.max)
-      finally s.close()
+      val names = try s.iterator().asScala.map(_.getFileName.toString).toVector
+                  finally s.close()
+      val (cps, commits) = names.filter(_.endsWith(".json"))
+        .partition(_.endsWith(".checkpoint.json"))
+      (commits.map(_.stripSuffix(".json").toLong).foldLeft(-1L)(math.max),
+        cps.map(_.stripSuffix(".checkpoint.json").toLong))
     }
   }
+
+  /** Latest committed version, -1 for a table with no commits. */
+  def latestVersion(table: String): Long = listLog(table)._1
 
   /** Commits 0..asOf, parsed. Missing commit file = corrupt/vacuumed-log
     * table → fail loudly. */
   def commits(table: String, asOf: Long): Seq[Commit] =
-    (0L to asOf).map(commits0(table, _))
+    (0L to asOf).map(commitAt(table, _))
 
-  /** ONE commit, parsed — the bounded single-file read (round 16, r15
-    * advice: recovery walks that called `commits(table, v).last` paid a
-    * full 0..v prefix parse per probe, O(head²) over a walk). */
-  def commitAt(table: String, v: Long): Commit = commits0(table, v)
+  /** ONE commit, parsed — the bounded single-file read. */
+  def commitAt(table: String, v: Long): Commit =
+    Commit(v, readActions(commitFile(table, v)))
 
   /** The version whose commit carries the txn action (appId,
     * txnVersion), walking BACKWARD one commit file per step — O(head)
@@ -198,7 +283,7 @@ object CommitLog {
     var v = head
     while (v >= 0) {
       val c =
-        try commits0(table, v)
+        try commitAt(table, v)
         catch {
           // the walk reached retired history (log retention physically
           // removed the commit file): the carrying commit predates it —
@@ -207,8 +292,7 @@ object CommitLog {
           // word as final
           case _: java.nio.file.NoSuchFileException => return None
         }
-      if (c.txns.exists {
-        case (a, tv) => a == appId && tv == txnVersion }) return Some(v)
+      if (c.actions.contains(Txn(appId, txnVersion))) return Some(v)
       v -= 1
     }
     None
@@ -216,199 +300,90 @@ object CommitLog {
 
   // ------------------------------------------------- log checkpointing
 
-  private def checkpointFile(table: String, v: Long): Path =
-    logDir(table).resolve(f"$v%020d.checkpoint.json")
-
-  /** Latest checkpoint at or below asOf, if any. */
-  private def latestCheckpoint(table: String, asOf: Long): Option[Long] = {
-    val d = logDir(table)
-    if (!Files.isDirectory(d)) None
-    else {
-      val s = Files.list(d)
-      try {
-        val cps = s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.endsWith(".checkpoint.json"))
-          .map(_.stripSuffix(".checkpoint.json").toLong)
-          .filter(_ <= asOf).toSeq
-        if (cps.isEmpty) None else Some(cps.max)
-      } finally s.close()
-    }
-  }
-
   /** Checkpoint format version. v2 (round 14) checkpoints are COMPLETE:
-    * they fold live files AND the per-app txn watermark map AND the
-    * schema metadata as of their version (the Delta checkpoint design —
-    * its checkpoints carry txn and metaData actions, public), marked
-    * with a `{"cpv":2}` header line. [[txnLatest]] and [[schemaAt]] can
-    * therefore STOP at a complete checkpoint: absence of a txn/meta
-    * entry there means none exists at or below it. A checkpoint file
-    * WITHOUT the header is a legacy adds-only snapshot — file state may
-    * be trusted, but txn/schema walks must fall through past it (the
-    * old full-scan cost, never a wrong answer). */
+    * they hold the whole [[Snapshot]] at their version (the Delta
+    * checkpoint design — its checkpoints carry txn and metaData actions,
+    * public), marked with a `{"cpv":2}` header line, so every state
+    * reader can START at one. A checkpoint file WITHOUT the header is a
+    * legacy adds-only snapshot and is skipped: it only duplicates state
+    * the commits derive, so skipping costs a longer replay, never a
+    * wrong answer. */
   val CheckpointFormatVersion = 2
 
-  private val CpvRe = """\{"cpv":(\d+)\}""".r
-
-  /** Parsed checkpoint state; `complete` = carries the v2 header;
-    * `ctsMax` the MONOTONIZED commit-timestamp running max folded over
-    * 0..cp (round 16 — lets [[versionAtTimestamp]] start at the
-    * checkpoint instead of walking to genesis; a legacy checkpoint
-    * without the line reads None and the walk falls through, old cost,
-    * never wrong). */
-  private case class Cp(adds: Vector[String], txns: Vector[(String, Long)],
-                        meta: Option[String], complete: Boolean,
-                        addStats: Map[String, String],
-                        ctsMax: Option[Long],
-                        dvs: Vector[(String, String)],
-                        constraints: Vector[(String, String)],
-                        gencols: Vector[(String, String)])
-
-  private def readCheckpoint(table: String, v: Long): Cp = {
+  /** The complete checkpoint at `v` as a snapshot; None for a legacy one. */
+  private def readCheckpoint(table: String, v: Long): Option[Snapshot] = {
     val f = checkpointFile(table, v)
-    val lines = Files.readAllLines(f).asScala.toVector
-    val complete = lines.exists(CpvRe.matches)
-    val a = parseActions(lines.filterNot(CpvRe.matches), f)
-    require(a.removes.isEmpty, s"checkpoint $f contains removes")
-    require(a.dvRms.isEmpty, s"checkpoint $f contains dv clears")
-    require(a.constraintRms.isEmpty, s"checkpoint $f contains constraint drops")
-    require(a.gencolRms.isEmpty, s"checkpoint $f contains gencol drops")
-    Cp(a.adds, a.txns, a.meta, complete, a.addStats, a.ctsMillis, a.dvs,
-      a.constraints, a.gencols)
+    val as = readActions(f)
+    require(!as.exists {
+      case _: Remove | _: DvRm | _: ConstraintRm | _: GencolRm => true
+      case _ => false
+    }, s"checkpoint $f contains drop actions")
+    Option.when(as.exists(_.isInstanceOf[Cpv]))(Empty(Commit(v, as)))
   }
 
-  /** Write a checkpoint of the folded state AT `version` — the log-
-    * compaction growth path: after N commits, replaying N JSON files per
-    * read is the bottleneck, so a checkpoint materializes the folded
-    * state and readers replay only the suffix (the Delta `_checkpoint`
-    * design). Folds all three state kinds (see
-    * [[CheckpointFormatVersion]]): live files, per-app txn watermarks
-    * (max per app — [[appendIdempotent]] requires per-app monotonicity,
-    * so max = latest), and the newest schema action — making
-    * [[txnLatest]] and [[schemaAt]] O(suffix) from any checkpoint, so a
-    * long-running idempotent sink is O(1) per batch once anyone
-    * checkpoints. Safe to write at any time by anyone — it duplicates
-    * derivable state, so a torn/competing checkpoint write can at worst
-    * be ignored; correctness never depends on it (tryCommit's
-    * CREATE_NEW stays the only coordination point). */
+  /** The newest COMPLETE checkpoint at or below `asOf`, or the empty
+    * state when there is none. */
+  private def base(table: String, asOf: Long, checkpoints: Seq[Long]): Snapshot =
+    checkpoints.filter(_ <= asOf).sorted(Ordering[Long].reverse).iterator
+      .flatMap(readCheckpoint(table, _)).nextOption().getOrElse(Empty)
+
+  /** The states after each commit in (from.version, last], lazily. */
+  private def replay(table: String, from: Snapshot, last: Long): Iterator[Snapshot] =
+    ((from.version + 1) to last).iterator.scanLeft(from)((s, v) => s(commitAt(table, v))).drop(1)
+
+  /** The table state at `asOf` (default: the latest version at call
+    * time): one log listing, one checkpoint parse, and a replay of only
+    * the commit suffix past the newest complete checkpoint — O(suffix),
+    * not O(asOf). Version −1 = no commits. */
+  def snapshot(table: String, asOf: Option[Long] = None): Snapshot = {
+    val (head, cps) = listLog(table)
+    val v = asOf.getOrElse(head)
+    val b = base(table, v, cps)
+    ((b.version + 1) to v).foldLeft(b)((s, u) => s(commitAt(table, u)))
+  }
+
+  /** The facet readers' `asOf = -2` means the latest version. */
+  private def at(asOf: Long): Option[Long] = Option.when(asOf != -2L)(asOf)
+
+  /** A snapshot that must hold at least one commit. */
+  private def snapshotOf(table: String, asOf: Option[Long] = None): Snapshot = {
+    val s = snapshot(table, asOf)
+    require(s.version >= 0, s"commit-log table $table has no commits")
+    s
+  }
+
+  /** Write a checkpoint of the [[Snapshot]] AT `version` (default: the
+    * latest) — the log-compaction growth path: after N commits, replaying
+    * N JSON files per read is the bottleneck, so a checkpoint
+    * materializes the folded state and readers replay only the suffix
+    * (the Delta `_checkpoint` design). Built from the newest complete
+    * checkpoint below it, so it never needs retired history. Safe to
+    * write at any time by anyone — it duplicates derivable state, so a
+    * torn/competing checkpoint write can at worst be ignored; correctness
+    * never depends on it (tryCommit's CREATE_NEW stays the only
+    * coordination point). */
   def checkpoint(table: String, version: Long = -1L): Long = {
-    val v = if (version >= 0) version else latestVersion(table)
-    require(v >= 0, s"commit-log table $table has no commits")
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val stats = scala.collection.mutable.Map.empty[String, String]
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val cons = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val gens = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    var meta: Option[String] = None
-    var ctsMax = -1L
-    commits(table, v).foreach { c =>
-      c.removes.foreach { f => live.remove(f); stats.remove(f); dvs.remove(f) }
-      c.adds.foreach { f => live.add(f); dvs.remove(f) }
-      stats ++= c.addStats
-      c.dvs.foreach { case (p, t) => dvs(t) = p }
-      c.dvRms.foreach(dvs.remove)
-      c.constraints.foreach { case (n, b64) => cons(n) = b64 }
-      c.constraintRms.foreach(cons.remove)
-      c.gencols.foreach { case (n, b64) => gens(n) = b64 }
-      c.gencolRms.foreach(gens.remove)
-      c.txns.foreach { case (app, tv) =>
-        txns(app) = math.max(txns.getOrElse(app, -1L), tv)
-      }
-      c.meta.foreach(m => meta = Some(m))
-      ctsMax = math.max(ctsMax, c.ctsMillis.getOrElse(ctsMax))
-    }
-    // per-file stats fold through checkpoints (round 15): a stats-carrying
-    // add keeps its object form, so data skipping survives log compaction;
-    // the cts running max folds too (round 16 — TIMESTAMP AS OF resolution
-    // is a left fold like the txn watermarks, so a checkpoint can answer
-    // for everything at or below it)
-    val body = (Seq(s"""{"cpv":$CheckpointFormatVersion}""") ++
-      (if (ctsMax >= 0) Seq(s"""{"cts":$ctsMax}""") else Nil) ++
-      meta.map(b64 => s"""{"meta":{"schemaB64":"$b64"}}""").toSeq ++
-      txns.map { case (app, tv) => s"""{"txn":{"app":"$app","version":$tv}}""" } ++
-      // live CHECK constraints fold through (round 17) — enforcement
-      // must survive log compaction like every other table invariant
-      cons.map { case (n, b64) =>
-        s"""{"constraint":{"name":"$n","exprB64":"$b64"}}""" } ++
-      // live generated-column definitions fold through (round 17)
-      gens.map { case (n, b64) =>
-        s"""{"gencol":{"name":"$n","exprB64":"$b64"}}""" } ++
-      // live deletion-vector attachments fold through too (round 16) —
-      // a checkpointed table must not resurrect merge-on-read deletes
-      dvs.map { case (t, p) => s"""{"dv":{"path":"$p","target":"$t"}}""" } ++
-      live.toVector.map(f => stats.get(f) match {
-        case Some(b64) => s"""{"add":{"path":"$f","statsB64":"$b64"}}"""
-        case None => s"""{"add":"$f"}"""
-      }))
-      .mkString("", "\n", "\n")
+    val s = snapshotOf(table, Option.when(version >= 0)(version))
     val tmp = logDir(table).resolve(s".cp_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, checkpointFile(table, v),
+    Files.write(tmp, body(s.actions))
+    Files.move(tmp, checkpointFile(table, s.version),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    v
+    s.version
   }
 
-  /** Data files live at version asOf, in first-added order. Starts from
-    * the newest checkpoint ≤ asOf when one exists and replays only the
-    * commit suffix — O(suffix), not O(asOf). */
+  private def body(actions: Seq[Action]): Array[Byte] =
+    actions.map(encode).mkString("", "\n", "\n").getBytes("UTF-8")
+
+  /** Data files live at version asOf, in first-added order. */
   def liveFiles(table: String, asOf: Long): Seq[String] =
-    liveAdds(table, asOf).map(_._1)
-
-  /** Live (file, statsB64) pairs at version asOf — the data-skipping
-    * read's input ([[readWhere]]). Same checkpoint-suffix economics as
-    * [[liveFiles]] (stats fold through v2 checkpoints); a file whose add
-    * carried no stats maps to None and is never pruned. */
-  def liveAdds(table: String, asOf: Long): Seq[(String, Option[String])] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
-    def fold(adds: Seq[String], removes: Seq[String],
-             stats: Map[String, String]): Unit = {
-      removes.foreach(live.remove)
-      adds.foreach(f => live(f) = stats.get(f))
-    }
-    latestCheckpoint(table, asOf) match {
-      case None =>
-        commits(table, asOf).foreach(c => fold(c.adds, c.removes, c.addStats))
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        fold(s.adds, Nil, s.addStats)
-        ((cp + 1) to asOf).foreach { v =>
-          val c = commits0(table, v)
-          fold(c.adds, c.removes, c.addStats)
-        }
-    }
-    live.toVector
-  }
+    snapshot(table, Some(asOf)).liveFiles
 
   /** Live deletion-vector attachments at `asOf`: data file → its
     * CURRENT dv file (the newest dv action wins; a remove/re-add/dvrm
-    * of the target clears it). Same checkpoint-suffix economics as
-    * [[liveAdds]] — dv actions fold through v2 checkpoints. */
-  def liveDvs(table: String, asOf: Long): Map[String, String] = {
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(c: Commit): Unit = {
-      c.removes.foreach(dvs.remove)
-      c.adds.foreach(dvs.remove)
-      c.dvs.foreach { case (p, t) => dvs(t) = p }
-      c.dvRms.foreach(dvs.remove)
-    }
-    latestCheckpoint(table, asOf) match {
-      case None =>
-        commits(table, asOf).foreach(fold)
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        s.dvs.foreach { case (p, t) => dvs(t) = p }
-        ((cp + 1) to asOf).foreach(v => fold(commits0(table, v)))
-    }
-    dvs.toMap
-  }
-
-  private def commits0(table: String, v: Long): Commit = {
-    val f = commitFile(table, v)
-    val a = parseActions(Files.readAllLines(f).asScala, f)
-    Commit(v, a.adds, a.removes, a.txns, a.meta, a.addStats, a.ctsMillis,
-      a.dvs, a.dvRms, a.constraints, a.constraintRms, a.gencols, a.gencolRms)
-  }
+    * of the target clears it). */
+  def liveDvs(table: String, asOf: Long): Map[String, String] =
+    snapshot(table, Some(asOf)).dvs
 
   // ------------------------------------------------- schema evolution
 
@@ -452,52 +427,23 @@ object CommitLog {
           s"evolveSchema cannot tighten nullability of '${old.name}' on $table")
       }
     }
-    val b64 = java.util.Base64.getEncoder
-      .encodeToString(schema.json.getBytes("UTF-8"))
-    var v = latestVersion(table) + 1
-    var tries = 0
-    while (!tryCommit(table, v, Nil, Nil, meta = Some(b64))) {
-      tries += 1
-      require(tries <= maxRetries,
-        s"evolveSchema lost $maxRetries commit races on $table")
-      v = math.max(v + 1, latestVersion(table) + 1)
-    }
-    v
+    commitAnywhere(table, Seq(Meta(base64(schema.json))), None, maxRetries, "evolveSchema")._1
   }
 
-  private def decodeSchema(b64: String): org.apache.spark.sql.types.StructType = {
-    val json = new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-  }
+  private def base64(s: String): String =
+    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+
+  private def unbase64(b64: String): String =
+    new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
+
+  private def decodeSchema(b64: String): StructType =
+    org.apache.spark.sql.types.DataType.fromJson(unbase64(b64)).asInstanceOf[StructType]
 
   /** The table's schema AS OF a version: the newest metadata action at
-    * or below it (backward scan, stops at the first hit — the
-    * [[txnLatest]] walk — OR at the newest COMPLETE checkpoint, whose
-    * folded meta answers for everything at or below it; r13 advice: a
-    * never-evolved table's read used to re-scan every commit back to 0
-    * on every snapshot read even when a checkpoint bounded the file
-    * fold). None = no evolution ever committed; readers then take the
-    * parquet footers' word as before. */
-  def schemaAt(table: String, asOf: Long = -2L)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val vMax = if (asOf == -2L) latestVersion(table) else asOf
-    val cp = latestCheckpoint(table, vMax)
-      .map(c => c -> readCheckpoint(table, c))
-    val floor = cp match {
-      case Some((c, s)) if s.complete => c // checkpoint answers ≤ c
-      case _ => -1L                        // legacy/none: walk to genesis
-    }
-    var v = vMax
-    while (v > floor) {
-      commits0(table, v).meta match {
-        case Some(b64) => return Some(decodeSchema(b64))
-        case None => v -= 1
-      }
-    }
-    cp.collect { case (c, s) if s.complete && c <= vMax => s.meta }
-      .flatten.map(decodeSchema)
-  }
+    * or below it. None = no evolution ever committed; readers then take
+    * the parquet footers' word as before. */
+  def schemaAt(table: String, asOf: Long = -2L): Option[StructType] =
+    snapshot(table, at(asOf)).schema
 
   /** Snapshot-isolated read. `asOf = None` pins the latest version AT
     * CALL TIME — the returned frame never sees later commits. When the
@@ -506,9 +452,8 @@ object CommitLog {
     * NULLs, and a read at a pre-evolution version sees exactly the old
     * schema. */
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.getOrElse(latestVersion(table))
-    require(v >= 0, s"commit-log table $table has no commits")
-    readAt(spark, table, v, schemaAt(table, v))
+    val s = snapshotOf(table, asOf)
+    readAt(spark, table, s, s.schema)
   }
 
   /** TIMESTAMP AS OF resolution (round 15 — the r14 verdict's #3 order):
@@ -526,43 +471,30 @@ object CommitLog {
     * there is no table state to serve there (the Delta contract).
     *
     * O(commits since the newest COMPLETE checkpoint) tiny log-file reads
-    * (round 16 — the monotonized cts is a left fold, exactly what v2
-    * checkpoints fold, the [[txnLatest]] precedent): when the
-    * checkpoint's cts-max is at or before the probe, every version ≤ cp
-    * resolves and the scan starts at cp+1. A probe BEFORE the
+    * (round 16 — the monotonized cts is part of the [[Snapshot]] fold):
+    * when the checkpoint's cts-max is at or before the probe, every
+    * version ≤ cp resolves and the scan starts at cp+1; it stops at the
+    * first version past the probe. A probe BEFORE the
     * checkpoint's cts-max needs the pre-checkpoint commit files — on a
     * table whose early history was physically retired (the Delta
     * log-retention analog) that resolution fails with a targeted error
     * instead of a raw missing-file read. */
   def versionAtTimestamp(table: String, tsMillis: Long): Long = {
-    val head = latestVersion(table)
+    val (head, cps) = listLog(table)
     require(head >= 0, s"commit-log table $table has no commits")
-    val cp = latestCheckpoint(table, head)
-      .map(c => c -> readCheckpoint(table, c))
-      .collect { case (c, s) if s.complete && s.ctsMax.isDefined =>
-        (c, s.ctsMax.get) }
-    var mono = -1L
-    var resolved = -1L
-    val start = cp match {
-      case Some((c, m)) if m <= tsMillis =>
-        // every version ≤ c is at-or-before the probe under monotonization
-        mono = m; resolved = c; c + 1
-      case _ => 0L
-    }
-    (start to head).foreach { v =>
-      val c =
-        try commits0(table, v)
-        catch {
-          case e: java.nio.file.NoSuchFileException =>
-            throw new IllegalStateException(
-              s"TIMESTAMP AS OF $tsMillis on $table needs commit file $v, " +
-                "which has been retired (log retention): resolution below " +
-                "the newest checkpoint's cts requires the full commit " +
-                "history", e)
-        }
-      mono = math.max(mono, c.ctsMillis.getOrElse(mono))
-      if (mono <= tsMillis) resolved = v
-    }
+    val cp = base(table, head, cps)
+    val from = if (cp.ctsMax <= tsMillis) cp else Empty
+    val resolved =
+      try (Iterator(from) ++ replay(table, from, head))
+        .takeWhile(_.ctsMax <= tsMillis).foldLeft(-1L)((_, s) => s.version)
+      catch {
+        case e: java.nio.file.NoSuchFileException =>
+          throw new IllegalStateException(
+            s"TIMESTAMP AS OF $tsMillis on $table needs ${e.getFile}, " +
+              "which has been retired (log retention): resolution below " +
+              "the newest checkpoint's cts requires the full commit " +
+              "history", e)
+      }
     require(resolved >= 0,
       s"timestamp $tsMillis predates the first commit of $table")
     resolved
@@ -574,17 +506,21 @@ object CommitLog {
                       tsMillis: Long): DataFrame =
     read(spark, table, Some(versionAtTimestamp(table, tsMillis)))
 
-  private def readAt(spark: SparkSession, table: String, v: Long,
-                     schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val files = liveFiles(table, v).map(f => Paths.get(table, f).toString)
-    val base = (files.isEmpty, schema) match {
-      case (true, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+  private def readAt(spark: SparkSession, table: String, s: Snapshot,
+                     schema: Option[StructType]): DataFrame =
+    applyDvs(spark, table, scan(spark, table, s.liveFiles, schema), s.dvs)
+
+  /** The parquet scan of `files` under `schema` (the footers' schema when
+    * None); no files = an empty frame of that schema. */
+  private def scan(spark: SparkSession, table: String, files: Seq[String],
+                   schema: Option[StructType]): DataFrame = {
+    val paths = files.map(f => Paths.get(table, f).toString)
+    (paths.isEmpty, schema) match {
+      case (true, Some(s)) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
       case (true, None) => spark.emptyDataFrame
-      case (false, Some(s)) => spark.read.schema(s).parquet(files: _*)
-      case (false, None) => spark.read.parquet(files: _*)
+      case (false, Some(s)) => spark.read.schema(s).parquet(paths: _*)
+      case (false, None) => spark.read.parquet(paths: _*)
     }
-    applyDvs(spark, table, base, liveDvs(table, v))
   }
 
   private def baseName(f: String): String =
@@ -887,22 +823,20 @@ object CommitLog {
     * |live files|-row metadata frame — catalog-sized, the documented
     * driver-probe class; 100 TB of data files never move. */
   def prunedLiveFiles(spark: SparkSession, table: String, cond: Column,
-                      asOf: Option[Long] = None): Seq[String] = {
-    val v = asOf.getOrElse(latestVersion(table))
-    require(v >= 0, s"commit-log table $table has no commits")
-    val adds = liveAdds(table, v)
-    if (adds.isEmpty) return Nil
-    val schema = schemaAt(table, v).getOrElse(
-      spark.read.parquet(Paths.get(table, adds.head._1).toString).schema)
+                      asOf: Option[Long] = None): Seq[String] =
+    pruned(spark, table, snapshotOf(table, asOf), cond)
+
+  private def pruned(spark: SparkSession, table: String, s: Snapshot,
+                     cond: Column): Seq[String] = {
+    if (s.files.isEmpty) return Nil
+    val schema = s.schema.getOrElse(
+      spark.read.parquet(Paths.get(table, s.files.head._1).toString).schema)
     val eligible = schema.fields.filter(statsEligible).map(_.name).toSet
     val condE = resolvedPredicate(spark, schema, cond)
-    if (eligible.isEmpty || condE.isEmpty) return adds.map(_._1)
+    if (eligible.isEmpty || condE.isEmpty) return s.liveFiles
     val possible = possibleCol(condE.get, eligible)
-    val dec = java.util.Base64.getDecoder
     import spark.implicits._
-    val rows = adds.map { case (f, st) =>
-      (f, st.map(s => new String(dec.decode(s), "UTF-8")).orNull)
-    }
+    val rows = s.files.toSeq.map { case (f, st) => (f, st.map(unbase64).orNull) }
     rows.toDF("file", "js")
       .withColumn("st", from_json(col("js"), statsStruct(schema)))
       .select(col("file"), col("st.n").as("n"), col("st.min").as("min"),
@@ -952,56 +886,31 @@ object CommitLog {
     * non-matching rows anyway. Deletion vectors still apply. */
   def readPruned(spark: SparkSession, table: String, cond: Column,
                  asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.getOrElse(latestVersion(table))
-    require(v >= 0, s"commit-log table $table has no commits")
-    val schema = schemaAt(table, v)
-    val kept = prunedLiveFiles(spark, table, cond, Some(v))
-    val files = kept.map(f => Paths.get(table, f).toString)
-    val base = (files.isEmpty, schema) match {
-      case (true, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-      case (true, None) =>
-        // every file pruned on a footer-schema table: serve the schema
-        // from one live footer, zero rows (limit 0 reads no row groups)
-        liveFiles(table, v).headOption match {
-          case Some(f) =>
-            spark.read.parquet(Paths.get(table, f).toString).limit(0)
-          case None => spark.emptyDataFrame
-        }
-      case (false, Some(s)) => spark.read.schema(s).parquet(files: _*)
-      case (false, None) => spark.read.parquet(files: _*)
-    }
+    val s = snapshotOf(table, asOf)
+    val schema = s.schema
+    val kept = pruned(spark, table, s, cond)
+    val base =
+      // every file pruned on a footer-schema table: serve the schema
+      // from one live footer, zero rows (limit 0 reads no row groups)
+      if (kept.isEmpty && schema.isEmpty && s.files.nonEmpty)
+        scan(spark, table, s.liveFiles.take(1), None).limit(0)
+      else scan(spark, table, kept, schema)
     // a DV'd file's stats describe a SUPERSET of its live rows (min/max
     // over pre-delete content) — pruning stays sound, merely less tight
     if (base.columns.isEmpty) base
-    else applyDvs(spark, table, base, liveDvs(table, v))
+    else applyDvs(spark, table, base, s.dvs)
   }
 
   // ------------------------------------------------ CHECK constraints
 
   /** Live CHECK constraints at `asOf`: name → SQL predicate text
     * (round 17 — Delta's public constraints surface, the enforcement
-    * half of the expectations_report advisor). Folds add/drop actions
-    * with the same checkpoint-suffix economics as [[liveDvs]]. */
-  def constraintsAt(table: String, asOf: Long = -2L): Map[String, String] = {
-    val v = if (asOf == -2L) latestVersion(table) else asOf
-    if (v < 0) return Map.empty
-    val cons = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(c: Commit): Unit = {
-      c.constraints.foreach { case (n, b64) => cons(n) = b64 }
-      c.constraintRms.foreach(cons.remove)
-    }
-    latestCheckpoint(table, v) match {
-      case None => commits(table, v).foreach(fold)
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        s.constraints.foreach { case (n, b64) => cons(n) = b64 }
-        ((cp + 1) to v).foreach(u => fold(commits0(table, u)))
-    }
-    cons.map { case (n, b64) =>
-      n -> new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
-    }.toMap
-  }
+    * half of the expectations_report advisor). */
+  def constraintsAt(table: String, asOf: Long = -2L): Map[String, String] =
+    decoded(snapshot(table, at(asOf)).constraints)
+
+  private def decoded(m: VectorMap[String, String]): Map[String, String] =
+    m.map { case (n, b64) => n -> unbase64(b64) }
 
   /** Enforce the table's live CHECK constraints on rows about to land
     * (the write-side half — Delta validates staged rows the same way).
@@ -1011,9 +920,9 @@ object CommitLog {
     * anything stages. A predicate that no longer RESOLVES against the
     * frame (a column the writer lacks) is equally loud — silently
     * passing it would turn every later read into a lie. */
-  private def validateConstraints(spark: SparkSession, table: String,
+  private def validateConstraints(table: String, s: Snapshot,
                                   df: DataFrame, verb: String): Unit = {
-    val entries = constraintsAt(table).toSeq
+    val entries = decoded(s.constraints).toSeq
     if (entries.isEmpty || df.columns.isEmpty) return
     val aggs = entries.map { case (n, sql) =>
       val pred =
@@ -1054,11 +963,10 @@ object CommitLog {
                     name: String, exprSql: String): Either[Conflict, Long] = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be [A-Za-z0-9_]+, got '$name'")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(!constraintsAt(table, head).contains(name),
+    val s = snapshotOf(table)
+    require(!s.constraints.contains(name),
       s"constraint '$name' already exists on $table")
-    val cur = read(spark, table, Some(head))
+    val cur = readAt(spark, table, s, s.schema)
     if (cur.columns.nonEmpty) {
       try cur.filter(expr(exprSql)).queryExecution.analyzed // resolution probe
       catch {
@@ -1069,50 +977,25 @@ object CommitLog {
       if (viol > 0) throw new IllegalStateException(
         s"addConstraint on $table: $viol existing row(s) violate CHECK ($exprSql)")
     }
-    val b64 = java.util.Base64.getEncoder
-      .encodeToString(exprSql.getBytes("UTF-8"))
-    if (tryCommit(table, head + 1, Nil, Nil, constraints = Seq(name -> b64)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    commitNext(table, s.version, Seq(Constraint(name, base64(exprSql))))
   }
 
   /** DROP CONSTRAINT — a metadata action; fails loudly on an unknown
     * name (the fail-loud convention: a typo'd drop must not silently
     * leave enforcement on). */
   def dropConstraint(table: String, name: String): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(constraintsAt(table, head).contains(name),
-      s"no constraint '$name' on $table")
-    if (tryCommit(table, head + 1, Nil, Nil, constraintRms = Seq(name)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    val s = snapshotOf(table)
+    require(s.constraints.contains(name), s"no constraint '$name' on $table")
+    commitNext(table, s.version, Seq(ConstraintRm(name)))
   }
 
   // ------------------------------------------------ generated columns
 
   /** Live generated-column definitions at `asOf`: column → SQL
     * expression text (round 17 — Delta's public generated-columns
-    * surface; same metadata fold as [[constraintsAt]]). */
-  def generatedAt(table: String, asOf: Long = -2L): Map[String, String] = {
-    val v = if (asOf == -2L) latestVersion(table) else asOf
-    if (v < 0) return Map.empty
-    val gens = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(c: Commit): Unit = {
-      c.gencols.foreach { case (n, b64) => gens(n) = b64 }
-      c.gencolRms.foreach(gens.remove)
-    }
-    latestCheckpoint(table, v) match {
-      case None => commits(table, v).foreach(fold)
-      case Some(cp) =>
-        val s = readCheckpoint(table, cp)
-        s.gencols.foreach { case (n, b64) => gens(n) = b64 }
-        ((cp + 1) to v).foreach(u => fold(commits0(table, u)))
-    }
-    gens.map { case (n, b64) =>
-      n -> new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
-    }.toMap
-  }
+    * surface). */
+  def generatedAt(table: String, asOf: Long = -2L): Map[String, String] =
+    decoded(snapshot(table, at(asOf)).gencols)
 
   /** The write-side half of generated columns: a frame LACKING a
     * generated column gets it MATERIALIZED from the expression (the
@@ -1123,9 +1006,9 @@ object CommitLog {
     * trusts the invariant, so it fails loudly instead). Returns the
     * possibly-augmented frame; every write verb routes its staged rows
     * through here before constraints validate. */
-  private def applyGenerated(spark: SparkSession, table: String,
+  private def applyGenerated(table: String, s: Snapshot,
                              df: DataFrame, verb: String): DataFrame = {
-    val gens = generatedAt(table).toSeq
+    val gens = decoded(s.gencols).toSeq
     if (gens.isEmpty || df.columns.isEmpty) return df
     gens.foldLeft(df) { case (d, (name, sql)) =>
       val e =
@@ -1162,11 +1045,10 @@ object CommitLog {
                          name: String, exprSql: String): Either[Conflict, Long] = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"generated column name must be [A-Za-z0-9_]+, got '$name'")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(!generatedAt(table, head).contains(name),
+    val s = snapshotOf(table)
+    require(!s.gencols.contains(name),
       s"generated column '$name' already exists on $table")
-    val cur = read(spark, table, Some(head))
+    val cur = readAt(spark, table, s, s.schema)
     if (cur.columns.nonEmpty) {
       require(cur.columns.contains(name),
         s"addGeneratedColumn: no column '$name' on $table " +
@@ -1184,24 +1066,16 @@ object CommitLog {
         s"addGeneratedColumn on $table: $viol existing row(s) disagree " +
           s"with ($exprSql)")
     }
-    val b64 = java.util.Base64.getEncoder
-      .encodeToString(exprSql.getBytes("UTF-8"))
-    if (tryCommit(table, head + 1, Nil, Nil, gencols = Seq(name -> b64)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    commitNext(table, s.version, Seq(Gencol(name, base64(exprSql))))
   }
 
   /** DROP a generated-column definition (metadata only — the column and
     * its data stay; only the write-side materialize/validate contract
     * ends). Loud on an unknown name. */
   def dropGeneratedColumn(table: String, name: String): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    require(generatedAt(table, head).contains(name),
-      s"no generated column '$name' on $table")
-    if (tryCommit(table, head + 1, Nil, Nil, gencolRms = Seq(name)))
-      Right(head + 1)
-    else Left(Conflict(head + 1, latestVersion(table)))
+    val s = snapshotOf(table)
+    require(s.gencols.contains(name), s"no generated column '$name' on $table")
+    commitNext(table, s.version, Seq(GencolRm(name)))
   }
 
   /** Stage a frame's rows as immutable data files in the table directory
@@ -1233,72 +1107,54 @@ object CommitLog {
   }
 
   /** Try to create commit `version` exactly — true iff THIS writer won
-    * the create-exclusive race for that version number. `txn` records an
-    * idempotent-writer watermark action alongside the file actions;
-    * `addStats` per-file column stats riding the add actions (round 15);
-    * `ctsMillis` overrides the commit timestamp action (tests/scripts —
-    * production writers take the wall-clock default; [[versionAtTimestamp]]
-    * monotonizes, so an override can never corrupt resolution). */
-  def tryCommit(table: String, version: Long,
-                adds: Seq[String], removes: Seq[String],
-                txn: Option[(String, Long)] = None,
-                meta: Option[String] = None,
-                addStats: Map[String, String] = Map.empty,
-                ctsMillis: Option[Long] = None,
-                dvs: Seq[(String, String)] = Nil,
-                dvRms: Seq[String] = Nil,
-                constraints: Seq[(String, String)] = Nil,
-                constraintRms: Seq[String] = Nil,
-                gencols: Seq[(String, String)] = Nil,
-                gencolRms: Seq[String] = Nil): Boolean = {
-    (constraints ++ gencols).foreach { case (n, b64) =>
-      require(n.matches("[A-Za-z0-9_]+"),
-        s"constraint/gencol name must be [A-Za-z0-9_]+, got '$n'")
-      require(b64.matches("[A-Za-z0-9+/=]+"),
-        s"constraint/gencol payload must be base64, got '${b64.take(40)}'")
-    }
-    (constraintRms ++ gencolRms).foreach(n => require(n.matches("[A-Za-z0-9_]+"),
-      s"constraint/gencol name must be [A-Za-z0-9_]+, got '$n'"))
-    (adds ++ removes).foreach(requireSafeName)
-    txn.foreach { case (app, v) =>
-      requireSafeName(app)
-      require(v >= 0, s"txn version must be >= 0, got $v")
-    }
-    meta.foreach(b64 => require(b64.matches("[A-Za-z0-9+/=]+"),
-      s"meta payload must be base64, got '${b64.take(40)}'"))
-    addStats.values.foreach(b64 => require(b64.matches("[A-Za-z0-9+/=]+"),
-      s"stats payload must be base64, got '${b64.take(40)}'"))
-    require(addStats.keySet.subsetOf(adds.toSet),
-      s"stats for files not in this commit's adds: ${addStats.keySet -- adds}")
-    dvs.foreach { case (p, t) => requireSafeName(p); requireSafeName(t) }
-    dvRms.foreach(requireSafeName)
-    val cts = ctsMillis.getOrElse(System.currentTimeMillis())
-    require(cts >= 0, s"commit timestamp must be >= 0, got $cts")
+    * the create-exclusive race for that version number. The file holds
+    * the commit's `Cts` action (`ctsMillis`; production writers take the
+    * wall-clock default, tests and scripts override it —
+    * [[versionAtTimestamp]] monotonizes, so an override can never corrupt
+    * resolution) and then `actions`, which callers list in the line
+    * order [[Action]] documents. Every line is validated before anything
+    * is written. */
+  def tryCommit(table: String, version: Long, actions: Seq[Action],
+                ctsMillis: Option[Long] = None): Boolean = {
+    val bytes = body(Cts(ctsMillis.getOrElse(System.currentTimeMillis())) +: actions)
     Files.createDirectories(logDir(table))
-    val body = (Seq(s"""{"cts":$cts}""") ++
-      meta.map(b64 => s"""{"meta":{"schemaB64":"$b64"}}""").toSeq ++
-      txn.map { case (app, v) =>
-        s"""{"txn":{"app":"$app","version":$v}}""" }.toSeq ++
-      removes.map(f => s"""{"remove":"$f"}""") ++
-      constraintRms.map(n => s"""{"constraintrm":"$n"}""") ++
-      constraints.map { case (n, b64) =>
-        s"""{"constraint":{"name":"$n","exprB64":"$b64"}}""" } ++
-      gencolRms.map(n => s"""{"gencolrm":"$n"}""") ++
-      gencols.map { case (n, b64) =>
-        s"""{"gencol":{"name":"$n","exprB64":"$b64"}}""" } ++
-      dvRms.map(t => s"""{"dvrm":"$t"}""") ++
-      dvs.map { case (p, t) => s"""{"dv":{"path":"$p","target":"$t"}}""" } ++
-      adds.map(f => addStats.get(f) match {
-        case Some(b64) => s"""{"add":{"path":"$f","statsB64":"$b64"}}"""
-        case None => s"""{"add":"$f"}"""
-      })).mkString("", "\n", "\n")
     try {
-      Files.write(commitFile(table, version), body.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
+      Files.write(commitFile(table, version), bytes, StandardOpenOption.CREATE_NEW)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     }
+  }
+
+  /** Commit at exactly `readVersion + 1` or report the [[Conflict]] — the
+    * serializable form every rewrite and metadata verb shares. */
+  private def commitNext(table: String, readVersion: Long,
+                         actions: Seq[Action]): Either[Conflict, Long] = {
+    val v = readVersion + 1
+    if (tryCommit(table, v, actions)) Right(v) else Left(Conflict(v, latestVersion(table)))
+  }
+
+  /** Blind retry: claim the first free version for `actions` (which
+    * must commute with every concurrent commit — appends and schema
+    * widenings do). Returns the version and the races lost. */
+  private def commitAnywhere(table: String, actions: Seq[Action], ctsMillis: Option[Long],
+                             maxRetries: Int, verb: String): (Long, Int) = {
+    var v = latestVersion(table) + 1
+    var tries = 0
+    while (!tryCommit(table, v, actions, ctsMillis)) {
+      tries += 1
+      require(tries <= maxRetries, s"$verb lost $maxRetries commit races on $table")
+      v = math.max(v + 1, latestVersion(table) + 1)
+    }
+    (v, tries)
+  }
+
+  /** Add actions for just-staged files, each carrying its [[statsFor]]
+    * payload. */
+  private def addsWithStats(spark: SparkSession, table: String,
+                            files: Seq[String]): Seq[Add] = {
+    val stats = statsFor(spark, table, files)
+    files.map(f => Add(f, stats.get(f)))
   }
 
   /** Blind-retry append: stage once, then claim the first free version.
@@ -1318,18 +1174,12 @@ object CommitLog {
                         maxRetries: Int = 50,
                         ctsMillis: Option[Long] = None,
                         withStats: Boolean = false): (Long, Int) = {
-    val gdf = applyGenerated(spark, table, df, "append")
-    validateConstraints(spark, table, gdf, "append") // before anything stages
-    val adds = stage(table, gdf)
-    val stats = if (withStats) statsFor(spark, table, adds) else Map.empty[String, String]
-    var v = latestVersion(table) + 1
-    var tries = 0
-    while (!tryCommit(table, v, adds, Nil, addStats = stats, ctsMillis = ctsMillis)) {
-      tries += 1
-      require(tries <= maxRetries, s"append lost $maxRetries commit races on $table")
-      v = math.max(v + 1, latestVersion(table) + 1)
-    }
-    (v, tries)
+    val s = snapshot(table)
+    val gdf = applyGenerated(table, s, df, "append")
+    validateConstraints(table, s, gdf, "append") // before anything stages
+    val files = stage(table, gdf)
+    val adds = if (withStats) addsWithStats(spark, table, files) else files.map(Add(_))
+    commitAnywhere(table, adds, ctsMillis, maxRetries, "append")
   }
 
   /** [[append]] with per-file column stats riding the add actions
@@ -1372,22 +1222,13 @@ object CommitLog {
     require(partCols.nonEmpty, "appendPartitioned: no partition columns")
     // generated columns materialize FIRST — a derived partition column
     // may be absent from the writer's frame (the canonical gencol use)
-    val gdf = applyGenerated(spark, table, df, "append")
+    val s = snapshot(table)
+    val gdf = applyGenerated(table, s, df, "append")
     partCols.foreach(c => require(gdf.columns.contains(c),
       s"appendPartitioned: no column '$c' (${gdf.columns.mkString(", ")})"))
-    validateConstraints(spark, table, gdf, "append")
-    val adds = stagePartitioned(table, gdf, partCols)
-    val stats = statsFor(spark, table, adds)
-    var v = latestVersion(table) + 1
-    var tries = 0
-    while (!tryCommit(table, v, adds, Nil, addStats = stats,
-      ctsMillis = ctsMillis)) {
-      tries += 1
-      require(tries <= maxRetries,
-        s"appendPartitioned lost $maxRetries commit races on $table")
-      v = math.max(v + 1, latestVersion(table) + 1)
-    }
-    v
+    validateConstraints(table, s, gdf, "append")
+    val adds = addsWithStats(spark, table, stagePartitioned(table, gdf, partCols))
+    commitAnywhere(table, adds, ctsMillis, maxRetries, "appendPartitioned")._1
   }
 
   /** [[stage]] through a `partitionBy` directory write: rows route to
@@ -1430,39 +1271,11 @@ object CommitLog {
   }
 
   /** Latest transaction version recorded for `appId` at or below table
-    * version `asOf` (−1 if none) — the idempotence watermark. Scans the
-    * log BACKWARD and stops at the FIRST commit carrying a txn for this
-    * appId ([[appendIdempotent]] requires per-app txnVersions to be
-    * monotone in commit order, so the newest txn commit holds the max)
-    * OR at the newest COMPLETE checkpoint, whose folded txn map answers
-    * for everything at or below it (round 14 — the Delta design the r12
-    * doc cited: txn actions fold into checkpoints, making the sink O(1)
-    * from any checkpoint instead of O(commits-since-last-write); an app
-    * that NEVER wrote no longer walks to genesis either). A legacy
-    * (pre-v2) checkpoint is walked past — old full-scan cost, never a
-    * wrong answer. */
-  def txnLatest(table: String, appId: String, asOf: Long = -2L): Long = {
-    val vMax = if (asOf == -2L) latestVersion(table) else asOf
-    val cp = latestCheckpoint(table, vMax)
-      .map(c => c -> readCheckpoint(table, c))
-    val floor = cp match {
-      case Some((c, s)) if s.complete => c
-      case _ => -1L
-    }
-    var v = vMax
-    while (v > floor) {
-      val hit = commits0(table, v).txns
-        .collect { case (app, tv) if app == appId => tv }
-      if (hit.nonEmpty) return hit.max
-      v -= 1
-    }
-    cp match {
-      case Some((_, s)) if s.complete =>
-        val hit = s.txns.collect { case (app, tv) if app == appId => tv }
-        if (hit.nonEmpty) hit.max else -1L
-      case _ => -1L
-    }
-  }
+    * version `asOf` (−1 if none) — the idempotence watermark. Txn
+    * actions fold into complete checkpoints (round 14 — the Delta
+    * design), so the sink's check is O(suffix) from any checkpoint. */
+  def txnLatest(table: String, appId: String, asOf: Long = -2L): Long =
+    snapshot(table, at(asOf)).txns.getOrElse(appId, -1L)
 
   /** EXACTLY-ONCE append for a replayable writer (the idempotent
     * streaming-sink primitive, Delta's txnAppId/txnVersion design): the
@@ -1480,14 +1293,15 @@ object CommitLog {
                        maxRetries: Int = 50,
                        withStats: Boolean = false,
                        partitionBy: Seq[String] = Nil): Option[Long] = {
-    if (txnLatest(table, appId) >= txnVersion) return None
-    val gdf = applyGenerated(spark, table, df, "append")
-    validateConstraints(spark, table, gdf, "append") // before anything stages
+    val s0 = snapshot(table)
+    if (s0.txns.getOrElse(appId, -1L) >= txnVersion) return None
+    val gdf = applyGenerated(table, s0, df, "append")
+    validateConstraints(table, s0, gdf, "append") // before anything stages
     // partitionBy (round 17): a streaming sink lands value-pure
     // partition files exactly-once — [[stagePartitioned]]'s router
     // under [[appendIdempotent]]'s txn watermark; stats always ride a
     // partitioned write (they ARE its pruning payload)
-    val adds =
+    val files =
       if (partitionBy.isEmpty) stage(table, gdf)
       else {
         partitionBy.foreach(c => require(gdf.columns.contains(c),
@@ -1498,20 +1312,20 @@ object CommitLog {
     // stats ride the idempotent sink's adds too (round 17 — the
     // streaming maintainer's gram index prunes its per-batch probe on
     // them); data-skipping metadata only, same as appendWithStats
-    val stats = if (withStats || partitionBy.nonEmpty) statsFor(spark, table, adds)
-                else Map.empty[String, String]
+    val adds =
+      if (withStats || partitionBy.nonEmpty) addsWithStats(spark, table, files)
+      else files.map(Add(_))
     var tries = 0
     while (true) {
-      val head = latestVersion(table)
-      if (txnLatest(table, appId, head) >= txnVersion) {
+      val s = snapshot(table)
+      if (s.txns.getOrElse(appId, -1L) >= txnVersion) {
         // duplicate delivery lost the race: drop the staged files now
         // (vacuum's orphan sweep is the crash backstop)
-        adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+        files.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
         return None
       }
-      if (tryCommit(table, head + 1, adds, Nil, Some((appId, txnVersion)),
-        addStats = stats))
-        return Some(head + 1)
+      if (tryCommit(table, s.version + 1, Txn(appId, txnVersion) +: adds))
+        return Some(s.version + 1)
       tries += 1
       require(tries <= maxRetries,
         s"idempotent append lost $maxRetries commit races on $table")
@@ -1527,15 +1341,8 @@ object CommitLog {
     * resurrect rows a concurrent commit changed. On conflict the caller
     * re-reads and recomputes (optimistic retry). */
   def replaceFiles(table: String, readVersion: Long,
-                   removes: Seq[String], adds: Seq[String],
-                   addStats: Map[String, String] = Map.empty,
-                   dvs: Seq[(String, String)] = Nil,
-                   dvRms: Seq[String] = Nil): Either[Conflict, Long] = {
-    val v = readVersion + 1
-    if (tryCommit(table, v, adds, removes, addStats = addStats,
-      dvs = dvs, dvRms = dvRms)) Right(v)
-    else Left(Conflict(v, latestVersion(table)))
-  }
+                   removes: Seq[String], adds: Seq[String]): Either[Conflict, Long] =
+    commitNext(table, readVersion, removes.map(Remove) ++ adds.map(Add(_)))
 
   /** DELETE WHERE through the log (round 14) — FILE-GRANULAR
     * copy-on-write, the Delta DELETE shape: one scan tagged with
@@ -1552,26 +1359,22 @@ object CommitLog {
     * unchanged). */
   def deleteWhere(spark: SparkSession, table: String,
                   cond: org.apache.spark.sql.Column): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val live = snap.liveFiles
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the MATCH SCAN (round 17): a file whose
     // committed stats exclude `cond` cannot contain a match — the
     // affected-file discovery reads only the possible candidates (on a
     // partitioned or clustered table, a selective DELETE scans its
     // partition, not the table; pruning is a necessary condition, so
     // the affected set is identical)
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
     // DV-applied scan (round 16): a copy-on-write rewrite of a file
     // carrying a deletion vector must not resurrect its DV'd rows
-    val tagged = applyDvs(spark, table, (schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }).withColumn("_graft_file", input_file_name()), liveDvs(table, head))
+    val tagged = applyDvs(spark, table, scan(spark, table, candidates, snap.schema)
+      .withColumn("_graft_file", input_file_name()), snap.dvs)
     val affectedPaths = tagged.filter(cond).select("_graft_file")
       .distinct().collect().map(_.getString(0)).toSet
     val affected = affectedOf(live, affectedPaths)
@@ -1642,26 +1445,21 @@ object CommitLog {
     * once, at write time). */
   def deleteWhereDv(spark: SparkSession, table: String,
                     cond: org.apache.spark.sql.Column): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val live = snap.liveFiles
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the match scan (round 17, deleteWhere's
     // rationale): only possible-match files feed the position discovery
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = scan(spark, table, candidates, snap.schema)
     base.columns.filter(_.startsWith("_graft_")).foreach { c =>
       throw new IllegalArgumentException(
         s"deleteWhereDv: column '$c' on $table collides with the reserved " +
           "'_graft_' helper-column prefix")
     }
-    val dvs = liveDvs(table, head)
+    val dvs = snap.dvs
     val tagged = applyDvs(spark, table, base
       .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
       .withColumn("_graft_pos", col("_metadata.row_index")), dvs)
@@ -1691,10 +1489,7 @@ object CommitLog {
       .withColumn("f", element_at(split(input_file_name(), "/"), -1))
       .select("f", "target").distinct()
       .collect().map(r => (r.getString(0), r.getString(1)))
-    val res =
-      if (tryCommit(table, head + 1, Nil, Nil, dvs = mapping.toSeq))
-        Right(head + 1)
-      else Left(Conflict(head + 1, latestVersion(table)))
+    val res = commitNext(table, head, mapping.toSeq.map(Dv.tupled))
     if (res.isLeft)
       staged.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
     res
@@ -1722,20 +1517,15 @@ object CommitLog {
                     cond: org.apache.spark.sql.Column,
                     sets: Seq[(String, org.apache.spark.sql.Column)]): Either[Conflict, Long] = {
     require(sets.nonEmpty, s"updateWhereDv on $table: no SET clauses")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val live = snap.liveFiles
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the match scan (round 17, deleteWhere's
     // rationale): only possible-match files feed the position discovery
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = scan(spark, table, candidates, snap.schema)
     sets.foreach { case (name, _) =>
       require(base.columns.contains(name),
         s"updateWhereDv: no column '$name' on $table (${base.columns.mkString(", ")})")
@@ -1745,7 +1535,7 @@ object CommitLog {
         s"updateWhereDv: column '$c' on $table collides with the reserved " +
           "'_graft_' helper-column prefix")
     }
-    val dvs = liveDvs(table, head)
+    val dvs = snap.dvs
     val tagged = applyDvs(spark, table, base
       .withColumn("_graft_f", element_at(split(input_file_name(), "/"), -1))
       .withColumn("_graft_pos", col("_metadata.row_index")), dvs)
@@ -1789,13 +1579,10 @@ object CommitLog {
         base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"updateWhereDv must preserve the schema of $table: " +
         s"${base.schema.simpleString} -> ${images.schema.simpleString}")
-    applyGenerated(spark, table, images, "update") // validate-only: all cols present
-    validateConstraints(spark, table, images, "update")
+    applyGenerated(table, snap, images, "update") // validate-only: all cols present
+    validateConstraints(table, snap, images, "update")
     val adds = stage(table, images)
-    val res =
-      if (tryCommit(table, head + 1, adds, Nil, dvs = mapping.toSeq))
-        Right(head + 1)
-      else Left(Conflict(head + 1, latestVersion(table)))
+    val res = commitNext(table, head, mapping.toSeq.map(Dv.tupled) ++ adds.map(Add(_)))
     if (res.isLeft) {
       staged.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
       adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
@@ -1818,11 +1605,11 @@ object CommitLog {
   def compactClustered(spark: SparkSession, table: String,
                        key: DataFrame => org.apache.spark.sql.Column,
                        targetFiles: Int): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val current = liveFiles(table, head)
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val current = snap.liveFiles
     if (current.isEmpty) return replaceFiles(table, head, Nil, Nil)
-    val cur = read(spark, table, Some(head))
+    val cur = readAt(spark, table, snap, snap.schema)
     val clustered = cur
       .repartitionByRange(targetFiles, key(cur))
       .sortWithinPartitions(key(cur))
@@ -1831,8 +1618,8 @@ object CommitLog {
     // stats on the rewrite (the Delta OPTIMIZE behavior; round 15): the
     // disjoint key ranges this verb creates are exactly what readWhere's
     // min/max pruning buys the most from
-    val res = replaceFiles(table, head, current, adds,
-      statsFor(spark, table, adds))
+    val res = commitNext(table, head,
+      current.map(Remove) ++ addsWithStats(spark, table, adds))
     if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
     res
   }
@@ -1859,20 +1646,15 @@ object CommitLog {
   def updateWhere(spark: SparkSession, table: String, cond: org.apache.spark.sql.Column,
                   sets: Seq[(String, org.apache.spark.sql.Column)]): Either[Conflict, Long] = {
     require(sets.nonEmpty, s"updateWhere on $table: no SET clauses")
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val live = liveFiles(table, head)
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val live = snap.liveFiles
     if (live.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
     // stats/partition cut on the match scan (round 17, deleteWhere's
     // rationale): only possible-match files feed the rewrite discovery
-    val candidates = prunedLiveFiles(spark, table, cond, Some(head))
+    val candidates = pruned(spark, table, snap, cond)
     if (candidates.isEmpty) return Right(head)
-    val paths = candidates.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = scan(spark, table, candidates, snap.schema)
     sets.foreach { case (name, _) =>
       require(base.columns.contains(name),
         s"updateWhere: no column '$name' on $table (${base.columns.mkString(", ")})")
@@ -1890,7 +1672,7 @@ object CommitLog {
     // DV-applied scan (round 16): an UPDATE rewrite must not resurrect
     // merge-on-read-deleted rows of an affected file
     val tagged = applyDvs(spark, table,
-      base.withColumn("_graft_file", input_file_name()), liveDvs(table, head))
+      base.withColumn("_graft_file", input_file_name()), snap.dvs)
     val affectedPaths = tagged.filter(cond).select("_graft_file")
       .distinct().collect().map(_.getString(0)).toSet
     val affected = affectedOf(live, affectedPaths)
@@ -1921,8 +1703,8 @@ object CommitLog {
     // pass the table's CHECK constraints AND generated-column
     // invariants like any append (round 17): SET the base column
     // without its generated derivative and the reject names it
-    applyGenerated(spark, table, updated, "update") // validate-only
-    validateConstraints(spark, table, updated, "update")
+    applyGenerated(table, snap, updated, "update") // validate-only
+    validateConstraints(table, snap, updated, "update")
     val adds = stage(table, updated)
     val res = replaceFiles(table, head, affected, adds)
     if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
@@ -1954,29 +1736,24 @@ object CommitLog {
     * (the no-op convention). */
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
                 key: String): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
+    val snap = snapshotOf(table)
+    val head = snap.version
     if (source.isEmpty) return Right(head)
-    val live = liveFiles(table, head)
-    val schema = schemaAt(table, head)
+    val live = snap.liveFiles
     // generated columns materialize-or-validate on the source up front
     // (round 17): an omitted gencol fills in, a wrong one fails loudly
-    val source1 = applyGenerated(spark, table, source, "merge")
+    val source1 = applyGenerated(table, snap, source, "merge")
     val dups = source1.groupBy(key).count().filter(col("count") > 1).limit(1).count()
     require(dups == 0L, s"mergeInto: source has duplicate '$key' keys")
     // no live rows: every source row inserts — one append-shaped commit
     if (live.isEmpty) {
-      validateConstraints(spark, table, source1, "merge")
+      validateConstraints(table, snap, source1, "merge")
       val adds = stage(table, source1)
       val res = replaceFiles(table, head, Nil, adds)
       if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
       return res
     }
-    val paths = live.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = scan(spark, table, live, snap.schema)
     require(source1.columns.sorted.sameElements(base.columns.sorted),
       s"mergeInto: source columns (${source1.columns.sorted.mkString(", ")}) " +
         s"must match $table's (${base.columns.sorted.mkString(", ")})")
@@ -1991,7 +1768,7 @@ object CommitLog {
       df.withColumn(f.name, col(f.name).cast(f.dataType))
     }.select(base.columns.map(col): _*).localCheckpoint()
     val tagged = applyDvs(spark, table,
-      base.withColumn("_graft_file", input_file_name()), liveDvs(table, head))
+      base.withColumn("_graft_file", input_file_name()), snap.dvs)
     val srcKeys = src.select(col(key)).distinct()
     val affectedPaths = tagged.join(srcKeys, Seq(key), "left_semi")
       .select("_graft_file").distinct().collect().map(_.getString(0)).toSet
@@ -2021,7 +1798,7 @@ object CommitLog {
       case Some(r) => r.unionByName(inserts)
       case None => inserts
     }
-    validateConstraints(spark, table, staged, "merge")
+    validateConstraints(table, snap, staged, "merge")
     val adds = stage(table, staged)
     val res = replaceFiles(table, head, affected, adds)
     if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
@@ -2070,9 +1847,9 @@ object CommitLog {
     * [[compact]] lost-race discipline). */
   private def rewriteSchema(spark: SparkSession, table: String, what: String)
                            (transform: DataFrame => DataFrame): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val cur = read(spark, table, Some(head))
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val cur = readAt(spark, table, snap, snap.schema)
     require(cur.columns.nonEmpty,
       s"cannot $what on $table: no schema at version $head (no data or metadata yet)")
     val rewritten = transform(cur)
@@ -2082,7 +1859,7 @@ object CommitLog {
     // Probed on a SCHEMA-ONLY frame: a filter directly over `rewritten`
     // would resolve a dropped column from upstream (Spark's
     // missing-reference rule) and silently pass.
-    constraintsAt(table, head).foreach { case (n, sql) =>
+    decoded(snap.constraints).foreach { case (n, sql) =>
       val probe = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rewritten.schema)
       try probe.filter(expr(sql)).queryExecution.analyzed
@@ -2094,7 +1871,7 @@ object CommitLog {
     }
     // same interplay for generated columns: the column must survive and
     // its expression must still resolve without it
-    generatedAt(table, head).foreach { case (n, sql) =>
+    decoded(snap.gencols).foreach { case (n, sql) =>
       val probe = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rewritten.schema)
       val ok =
@@ -2107,16 +1884,12 @@ object CommitLog {
         s"cannot $what on $table: generated column '$n' ($sql) would be " +
           "orphaned — drop its definition first")
     }
-    val b64 = java.util.Base64.getEncoder
-      .encodeToString(rewritten.schema.json.getBytes("UTF-8"))
-    val removes = liveFiles(table, head)
+    val removes = snap.liveFiles
     val adds = if (removes.isEmpty) Nil else stage(table, rewritten)
-    if (tryCommit(table, head + 1, adds, removes, meta = Some(b64)))
-      Right(head + 1)
-    else {
-      adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
-      Left(Conflict(head + 1, latestVersion(table)))
-    }
+    val res = commitNext(table, head, Meta(base64(rewritten.schema.json)) +:
+      (removes.map(Remove) ++ adds.map(Add(_))))
+    if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
+    res
   }
 
   /** SHALLOW CLONE (round 15 — Delta's public design): fork a table at a
@@ -2136,33 +1909,22 @@ object CommitLog {
     * like a pre-horizon time travel. */
   def shallowClone(source: String, target: String,
                    asOf: Option[Long] = None): Long = {
-    val v = asOf.getOrElse(latestVersion(source))
-    require(v >= 0, s"commit-log table $source has no commits")
+    val snap = snapshotOf(source, asOf)
     require(latestVersion(target) == -1L,
       s"clone target $target already has commits")
     val rel = Paths.get(target).toAbsolutePath.normalize
       .relativize(Paths.get(source).toAbsolutePath.normalize).toString
-    val adds = liveAdds(source, v)
-    val refs = adds.map { case (f, _) => s"$rel/$f" }
-    val stats = adds.collect { case (f, Some(st)) => s"$rel/$f" -> st }.toMap
-    // deletion-vector attachments clone as external references too —
-    // a clone that dropped them would RESURRECT merge-on-read deletes
-    // (read-path matching is by basename, so relative paths are fine)
-    val dvs = liveDvs(source, v).toSeq
-      .map { case (t, p) => (s"$rel/$p", s"$rel/$t") }
-    val meta = schemaAt(source, v).map(s => java.util.Base64.getEncoder
-      .encodeToString(s.json.getBytes("UTF-8")))
-    // CHECK constraints clone with the snapshot too (round 17): a fork
-    // that silently dropped enforcement would accept rows its source
-    // rejects
-    val enc = java.util.Base64.getEncoder
-    val cons = constraintsAt(source, v).toSeq
-      .map { case (n, sql) => n -> enc.encodeToString(sql.getBytes("UTF-8")) }
-    // generated-column definitions clone too (round 17) — same rationale
-    val gens = generatedAt(source, v).toSeq
-      .map { case (n, sql) => n -> enc.encodeToString(sql.getBytes("UTF-8")) }
-    require(tryCommit(target, 0L, refs, Nil, meta = meta, addStats = stats,
-      dvs = dvs, constraints = cons, gencols = gens),
+    // CHECK constraints and generated-column definitions clone with the
+    // snapshot (round 17): a fork that silently dropped them would accept
+    // rows its source rejects. Deletion-vector attachments clone as
+    // external references too — a clone that dropped them would
+    // RESURRECT merge-on-read deletes (read-path matching is by basename,
+    // so relative paths are fine)
+    val actions = snap.meta.map(Meta).toSeq ++
+      snap.constraints.map(Constraint.tupled) ++ snap.gencols.map(Gencol.tupled) ++
+      snap.dvs.map { case (t, p) => Dv(s"$rel/$p", s"$rel/$t") } ++
+      snap.files.map { case (f, st) => Add(s"$rel/$f", st) }
+    require(tryCommit(target, 0L, actions),
       s"clone target $target saw a concurrent commit")
     0L
   }
@@ -2181,16 +1943,21 @@ object CommitLog {
     require(retainVersions >= 1, s"retainVersions must be >= 1, got $retainVersions")
     val vMax = latestVersion(table)
     require(vMax >= 0, s"commit-log table $table has no commits")
-    val window = (vMax - retainVersions + 1).max(0L) to vMax
+    val first = snapshot(table, Some((vMax - retainVersions + 1).max(0L)))
     // retained = data files AND dv files any retained snapshot reads
     // (sweeping a dv file under a retained snapshot would RESURRECT its
     // deleted rows — worse than a failing read)
-    val retained = window.flatMap(liveFiles(table, _)).toSet ++
-      window.flatMap(liveDvs(table, _).values).toSet
-    val all = commits(table, vMax)
-    (all.flatMap(_.adds) ++ all.flatMap(_.dvs.map(_._1))).distinct
+    val retained = (Iterator(first) ++ replay(table, first, vMax))
+      .flatMap(s => s.files.keys ++ s.dvs.values).toSet
+    everReferenced(table, vMax).distinct
       .filterNot(retained)
       .filterNot(isExternalRef)
+  }
+
+  /** Every data and dv file any of commits 0..vMax references. */
+  private def everReferenced(table: String, vMax: Long): Seq[String] = {
+    val all = commits(table, vMax)
+    all.flatMap(_.adds) ++ all.flatMap(_.actions.collect { case Dv(p, _) => p })
   }
 
   /** An add that points outside the table directory — a [[shallowClone]]
@@ -2256,12 +2023,7 @@ object CommitLog {
     val dir = Paths.get(table)
     if (!Files.isDirectory(dir)) return Nil
     val vMax = latestVersion(table)
-    val referenced: Set[String] =
-      if (vMax < 0) Set.empty
-      else {
-        val all = commits(table, vMax)
-        (all.flatMap(_.adds) ++ all.flatMap(_.dvs.map(_._1))).toSet
-      }
+    val referenced = everReferenced(table, vMax).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     val s = Files.list(dir)
     try s.iterator().asScala
@@ -2300,16 +2062,17 @@ object CommitLog {
     * rewrite). Returns the new version, or a [[Conflict]] if another
     * writer moved the head. */
   def restore(table: String, toVersion: Long): Either[Conflict, Long] = {
-    val head = latestVersion(table)
+    val now = snapshot(table)
+    val head = now.version
     require(toVersion >= 0 && toVersion <= head,
       s"restore target $toVersion outside [0, $head]")
-    val target = liveFiles(table, toVersion)
+    val past = snapshot(table, Some(toVersion))
+    val target = past.liveFiles
     // deletion-vector state is versioned like file state: the restore
     // commit re-emits the TARGET version's dv attachments and clears
     // the ones only the head had — a roll-back across a merge-on-read
     // delete restores the deleted rows (round 16)
-    val targetDvs = liveDvs(table, toVersion)
-    val headDvs = liveDvs(table, head)
+    val targetDvs = past.dvs
     // the horizon-enforcement edge: a prior vacuum may have dropped files
     // only the target version references — committing the restore anyway
     // would manufacture a corrupt HEAD (not just a failing time-travel
@@ -2318,13 +2081,13 @@ object CommitLog {
       .filterNot(f => Files.exists(Paths.get(table, f)))
     require(gone.isEmpty,
       s"restore target $toVersion references vacuumed data files: ${gone.mkString(", ")}")
-    val current = liveFiles(table, head)
+    val current = now.liveFiles
     val removes = current.filterNot(target.toSet)
     val adds = target.filterNot(current.toSet)
-    val dvs = targetDvs.toSeq.map { case (t, p) => (p, t) }
-    val dvRms = (headDvs.keySet -- targetDvs.keySet)
+    val dvRms = (now.dvs.keySet -- targetDvs.keySet)
       .filter(target.toSet).toSeq.sorted
-    replaceFiles(table, head, removes, adds, dvs = dvs, dvRms = dvRms)
+    commitNext(table, head, removes.map(Remove) ++ dvRms.map(DvRm) ++
+      targetDvs.map { case (t, p) => Dv(p, t) } ++ adds.map(Add(_)))
   }
 
   /** OPTIMIZE (small-file compaction) through the log: rewrite the
@@ -2335,18 +2098,18 @@ object CommitLog {
     * row, now owned by the table format instead of bare parquet. */
   def compact(spark: SparkSession, table: String,
               targetFiles: Int = 1): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val current = liveFiles(table, head)
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val current = snap.liveFiles
     // a table whose commits reference no data files (all-empty appends)
     // compacts to an empty commit — read() would hand back a schemaless
     // frame that parquet can't re-write
     if (current.isEmpty) return replaceFiles(table, head, Nil, Nil)
-    val adds = stage(table, read(spark, table, Some(head)).repartition(targetFiles))
+    val adds = stage(table, readAt(spark, table, snap, snap.schema).repartition(targetFiles))
     // stats survive compaction too (the Delta OPTIMIZE behavior) — a
     // maintenance verb must never silently degrade future reads
-    val res = replaceFiles(table, head, current, adds,
-      statsFor(spark, table, adds))
+    val res = commitNext(table, head,
+      current.map(Remove) ++ addsWithStats(spark, table, adds))
     // a lost race leaves the staged rewrite referenced by nothing: clean
     // it up here so retry loops don't leak (vacuum's orphan sweep is the
     // backstop for callers that crash before reaching this line)
@@ -2370,22 +2133,16 @@ object CommitLog {
   def compactWhere(spark: SparkSession, table: String,
                    cond: org.apache.spark.sql.Column,
                    targetFiles: Int = 1): Either[Conflict, Long] = {
-    val head = latestVersion(table)
-    require(head >= 0, s"commit-log table $table has no commits")
-    val selected = prunedLiveFiles(spark, table, cond, Some(head))
+    val snap = snapshotOf(table)
+    val head = snap.version
+    val selected = pruned(spark, table, snap, cond)
     if (selected.isEmpty) return Right(head)
-    val schema = schemaAt(table, head)
-    val paths = selected.map(f => Paths.get(table, f).toString)
-    val base = schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
     val selectedSet = selected.toSet
-    val dvApplied = applyDvs(spark, table, base,
-      liveDvs(table, head).filter { case (t, _) => selectedSet.contains(t) })
+    val dvApplied = applyDvs(spark, table, scan(spark, table, selected, snap.schema),
+      snap.dvs.filter { case (t, _) => selectedSet.contains(t) })
     val adds = stage(table, dvApplied.repartition(targetFiles))
-    val res = replaceFiles(table, head, selected, adds,
-      statsFor(spark, table, adds))
+    val res = commitNext(table, head,
+      selected.map(Remove) ++ addsWithStats(spark, table, adds))
     if (res.isLeft) adds.foreach(f => Files.deleteIfExists(Paths.get(table, f)))
     res
   }
@@ -2411,30 +2168,22 @@ object CommitLog {
   def readIncremental(spark: SparkSession, table: String,
                       fromVersion: Long,
                       toVersion: Long = -2L): (DataFrame, Long) = {
-    val head = if (toVersion == -2L) latestVersion(table) else toVersion
+    val snap = snapshot(table, at(toVersion))
+    val head = snap.version
     require(head >= fromVersion,
       s"cursor $fromVersion is ahead of version $head on $table")
     val adds = ((fromVersion + 1) to head).flatMap { v =>
-      val c = commits0(table, v)
+      val c = commitAt(table, v)
       require(c.removes.isEmpty,
         s"non-append commit $v on $table (removes ${c.removes.size} files) — " +
           "the incremental source is append-only by contract")
-      require(c.dvs.isEmpty && c.dvRms.isEmpty,
+      require(!c.actions.exists { case _: Dv | _: DvRm => true; case _ => false },
         s"non-append commit $v on $table (deletion-vector actions) — a " +
           "merge-on-read delete changes rows; the incremental source is " +
           "append-only by contract")
       c.adds
     }
-    val schema = schemaAt(table, head)
-    val files = adds.map(f => Paths.get(table, f).toString)
-    val df = (files.isEmpty, schema) match {
-      case (true, Some(s)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case (true, None) => spark.emptyDataFrame
-      case (false, Some(s)) => spark.read.schema(s).parquet(files: _*)
-      case (false, None) => spark.read.parquet(files: _*)
-    }
-    (df, head)
+    (scan(spark, table, adds, snap.schema), head)
   }
 
   /** Row-level change feed DERIVED from consecutive snapshots (the CDF
@@ -2449,31 +2198,22 @@ object CommitLog {
   def tableChanges(spark: SparkSession, table: String, key: String): DataFrame = {
     val vMax = latestVersion(table)
     require(vMax >= 0, s"commit-log table $table has no commits")
-    // per-version schemas from ONE forward fold over the commits (r13
-    // advice: calling schemaAt per version made the CDF read O(V²) log
-    // reads — the same cumulative-cost class the txn checkpoint fix
-    // targets); decoded schemas memoized per distinct payload
-    val decoded = scala.collection.mutable.Map.empty[String,
-      org.apache.spark.sql.types.StructType]
-    val schemas: IndexedSeq[Option[org.apache.spark.sql.types.StructType]] =
-      commits(table, vMax)
-        .scanLeft(Option.empty[String])((acc, c) => c.meta.orElse(acc))
-        .tail
-        .map(_.map(b64 => decoded.getOrElseUpdate(b64, decodeSchema(b64))))
-        .toIndexedSeq
+    // every version's snapshot from ONE forward fold over the commits
+    // (r13 advice: a fold per version made the CDF read O(V²) log reads)
+    val states = replay(table, Empty, vMax).toVector
     // each version-step compares BOTH snapshots under the NEWER step's
     // schema: an ADD COLUMN evolution then changes no fingerprints (old
     // rows read NULL in the new column on both sides), so a metadata-only
     // commit emits zero change rows — the Delta CDF contract — while a
     // later write that fills the column fingerprints as a real update
-    def fingerprinted(v: Long, sch: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-      val df = readAt(spark, table, v, sch)
+    def fingerprinted(v: Long, sch: Option[StructType]): DataFrame = {
+      val df = readAt(spark, table, states(v.toInt), sch)
       val content = df.columns.filterNot(_ == key).sorted
         .map(c => col(c).cast("string"))
       df.select(col(key), xxhash64(content: _*).as("row_fp"))
     }
     (0L to vMax).map { v =>
-      val sch = schemas(v.toInt)
+      val sch = states(v.toInt).schema
       val cur = fingerprinted(v, sch).withColumnRenamed("row_fp", "cur_fp")
       val prev =
         if (v == 0) cur.filter(lit(false)).select(col(key), col("cur_fp").as("prev_fp"))

@@ -1044,8 +1044,8 @@ object StreamingJobs {
       val removes = if (lHead < 0) Nil else CommitLog.liveFiles(labelsTable, lHead)
       // single maintenance writer per catalog (the streaming-sink
       // contract); a lost race here means a second maintainer — loud
-      if (!CommitLog.tryCommit(labelsTable, lHead + 1, adds, removes,
-        txn = Some((appId, batchId))))
+      if (!CommitLog.tryCommit(labelsTable, lHead + 1, CommitLog.Txn(appId, batchId) +:
+        (removes.map(CommitLog.Remove) ++ adds.map(CommitLog.Add(_)))))
         throw new IllegalStateException(
           s"label catalog $labelsTable has a concurrent writer at ${lHead + 1}")
       // gram-table hygiene (round 16, dial; round 17: CLUSTERED): one

@@ -44,7 +44,7 @@ class CommitLogSpec extends AnyFunSuite {
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(2)
     def racer(adds: Seq[String]) = pool.submit(new Callable[Boolean] {
-      def call(): Boolean = { start.await(); CommitLog.tryCommit(t, 1L, adds, Nil) }
+      def call(): Boolean = { start.await(); CommitLog.tryCommit(t, 1L, adds.map(CommitLog.Add(_))) }
     })
     val (fa, fb) = (racer(addsA), racer(addsB))
     start.countDown()
@@ -55,7 +55,7 @@ class CommitLogSpec extends AnyFunSuite {
     // version (appends commute) and both writers' rows land
     val loser = if (wa) addsB else addsA
     assert(CommitLog.read(spark, t).count() == 2)
-    assert(CommitLog.tryCommit(t, 2L, loser, Nil))
+    assert(CommitLog.tryCommit(t, 2L, loser.map(CommitLog.Add(_))))
     assert(CommitLog.read(spark, t).select("id").as[Long].collect().toSet ==
       Set(0L, 1L, 2L))
   }
@@ -157,6 +157,86 @@ class CommitLogSpec extends AnyFunSuite {
     // a later checkpoint at head supersedes for head reads
     CommitLog.checkpoint(t)
     assert(CommitLog.liveFiles(t, 2L) == before(2))
+
+    // every action kind: stats, txns, schema, DVs (a restore re-adding
+    // DV'd files after OPTIMIZE), constraints and generated columns. Each
+    // version's state must be identical read from the raw log and read
+    // through two complete checkpoints plus a header-less legacy one
+    val r = tmpTable()
+    def rows(ids: Range, score: Boolean) = {
+      val df = ids.map(i => (i.toLong, s"s$i", 2L * i)).toDF("id", "s", "twice")
+      if (score) df.withColumn("score", col("id") * 10L) else df
+    }
+    CommitLog.appendWithStats(spark, r, rows(0 until 8, score = false).repartition(2),
+      ctsMillis = Some(1000L)) // v0
+    CommitLog.appendIdempotent(spark, r, rows(8 until 12, score = false), "job", 0L) // v1
+    CommitLog.evolveSchema(r, CommitLog.read(spark, r).schema
+      .add("score", org.apache.spark.sql.types.LongType)) // v2
+    CommitLog.appendIdempotent(spark, r, rows(12 until 16, score = true), "job", 1L,
+      withStats = true) // v3
+    assert(CommitLog.addConstraint(spark, r, "id_nonneg", "id >= 0") == Right(4L))
+    assert(CommitLog.addGeneratedColumn(spark, r, "twice", "id * 2") == Right(5L))
+    assert(CommitLog.deleteWhereDv(spark, r, col("id") % 3 === 0L) == Right(6L))
+    assert(CommitLog.compact(spark, r) == Right(7L))
+    assert(CommitLog.restore(r, 6L) == Right(8L))
+    assert(CommitLog.dropConstraint(r, "id_nonneg") == Right(9L))
+    assert(CommitLog.dropGeneratedColumn(r, "twice") == Right(10L))
+    CommitLog.appendIdempotent(spark, r, rows(16 until 18, score = true), "other", 5L) // v11
+    val head = CommitLog.latestVersion(r)
+    assert(head == 11L)
+    val probes = (0L to head).flatMap { v =>
+      CommitLog.commitAt(r, v).actions.collect { case CommitLog.Cts(ms) => Seq(ms - 1, ms) }
+        .flatten
+    } :+ Long.MaxValue
+    def facets(v: Long) = (
+      CommitLog.snapshot(r, Some(v)).files.toSeq, CommitLog.liveFiles(r, v),
+      CommitLog.liveDvs(r, v), CommitLog.txnLatest(r, "job", v),
+      CommitLog.txnLatest(r, "other", v), CommitLog.schemaAt(r, v).map(_.json),
+      CommitLog.constraintsAt(r, v), CommitLog.generatedAt(r, v))
+    def timeTravel = probes.map(ts => scala.util.Try(CommitLog.versionAtTimestamp(r, ts)).toOption)
+    val raw = (0L to head).map(facets)
+    val rawTravel = timeTravel
+    assert(raw(8)._3.nonEmpty && raw(8)._3 == raw(6)._3, "restore must re-attach the DVs")
+    assert(raw(7)._3.isEmpty && raw(0)._1.exists(_._2.isDefined))
+    CommitLog.checkpoint(r, 4L)
+    CommitLog.checkpoint(r, 8L)
+    val legacy = CommitLog.liveFiles(r, 10L).map(f => s"""{"add":"$f"}""")
+      .mkString("", "\n", "\n")
+    Files.write(java.nio.file.Paths.get(r, "_graft_log", f"${10L}%020d.checkpoint.json"),
+      legacy.getBytes("UTF-8"))
+    (0L to head).foreach { v =>
+      assert(facets(v) == raw(v.toInt), s"checkpoints changed version $v's state")
+    }
+    assert(timeTravel == rawTravel)
+  }
+
+  test("log line format: every action form decodes and re-encodes byte-identically") {
+    // one literal line per form: logs written by earlier builds must
+    // stay readable, and a rewrite of the codec must not drift
+    val golden = Seq(
+      """{"add":"../src/0a1b2c3d-part-00000.parquet"}""",
+      """{"add":{"path":"0a1b2c3d-part-00001.parquet","statsB64":"eyJuIjozfQ=="}}""",
+      """{"remove":"0a1b2c3d-part-00000.parquet"}""",
+      """{"txn":{"app":"job","version":7}}""",
+      """{"meta":{"schemaB64":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbXX0="}}""",
+      """{"cts":1700000000000}""",
+      """{"dv":{"path":"0a1b2c3d-dv-00000.parquet","target":"0a1b2c3d-part-00001.parquet"}}""",
+      """{"dvrm":"0a1b2c3d-part-00001.parquet"}""",
+      """{"constraint":{"name":"id_nonneg","exprB64":"aWQgPj0gMA=="}}""",
+      """{"constraintrm":"id_nonneg"}""",
+      """{"gencol":{"name":"twice","exprB64":"aWQgKiAy"}}""",
+      """{"gencolrm":"twice"}""",
+      """{"cpv":2}""")
+    val decoded = golden.map(CommitLog.decode)
+    golden.zip(decoded).foreach { case (l, a) => assert(CommitLog.encode(a) == l, s"$a") }
+    assert(decoded.map(_.getClass).distinct.size == 12, "both add shapes + 11 more kinds")
+    assert(decoded(1) == CommitLog.Add("0a1b2c3d-part-00001.parquet", Some("eyJuIjozfQ==")))
+    assert(decoded(3) == CommitLog.Txn("job", 7L))
+    // only the exact encoding is a valid line
+    Seq("""{"cts": 5}""", """{"cts":"5"}""", """{"remove":"a","add":"b"}""",
+      """{"txn":{"version":7,"app":"job"}}""", """{"add":""}""").foreach { l =>
+      intercept[IllegalStateException](CommitLog.decode(l))
+    }
   }
 
   test("MERGE INTO against the real format: cdc_apply's surviving rows are the table's next snapshot") {
@@ -265,7 +345,7 @@ class CommitLogSpec extends AnyFunSuite {
     CommitLog.append(spark, t, Seq((1L, "a")).toDF("id", "s"))
     intercept[IllegalArgumentException] { CommitLog.vacuumable(t, 0L) }
     intercept[IllegalArgumentException] {
-      CommitLog.tryCommit(t, 1L, Seq("evil\"name.parquet"), Nil)
+      CommitLog.tryCommit(t, 1L, Seq(CommitLog.Add("evil\"name.parquet")))
     }
     // a future-extended/malformed action must not yield a silently wrong
     // snapshot: write a non-add/remove line as commit 1 and read through it
@@ -694,6 +774,14 @@ class CommitLogSpec extends AnyFunSuite {
       "a never-written app must stop at the checkpoint, not walk to genesis")
     assert(CommitLog.schemaAt(t).exists(_.fieldNames.contains("score")),
       "schema must come from the checkpoint's folded meta")
+    assert(CommitLog.read(spark, t).count() == 4)
+    // a new checkpoint is built from the old one plus the suffix — it
+    // never needs the retired commits
+    assert(CommitLog.checkpoint(t) == 4L)
+    assert(CommitLog.txnLatest(t, "job") == 1L)
+    assert(CommitLog.txnLatest(t, "other") == 7L)
+    assert(CommitLog.txnLatest(t, "nobody") == -1L)
+    assert(CommitLog.schemaAt(t).exists(_.fieldNames.contains("score")))
     assert(CommitLog.read(spark, t).count() == 4)
     // the idempotent sink keeps its exactly-once semantics O(suffix)
     assert(CommitLog.appendIdempotent(spark, t,
@@ -1579,7 +1667,7 @@ class CommitLogSpec extends AnyFunSuite {
     val sub = java.nio.file.Paths.get(t, "sub")
     Files.createDirectories(sub)
     Files.copy(java.nio.file.Paths.get(t, local), sub.resolve(local))
-    assert(CommitLog.tryCommit(t, 1L, Seq(s"sub/$local"), Nil))
+    assert(CommitLog.tryCommit(t, 1L, Seq(CommitLog.Add(s"sub/$local"))))
     intercept[IllegalStateException] {
       CommitLog.deleteWhereDv(spark, t, col("id") === 1L)
     }
